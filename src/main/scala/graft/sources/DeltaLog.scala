@@ -1390,7 +1390,7 @@ object DeltaLog {
       // any failure the staging dir must not leak (vacuum additionally
       // sweeps stale stages left by hard-killed processes)
       try { if (fs.exists(stage)) fs.delete(stage, true) }
-      catch { case _: Throwable => () }
+      catch { case scala.util.control.NonFatal(_) => () }
     }
   }
 
@@ -3441,17 +3441,27 @@ object DeltaLog {
     from_json(to_json(col(name)), CanonicalActionTypes(name)).as(name)
   }
 
+  /** Action kinds a checkpoint carries, in its column order. */
+  private val CheckpointActionKinds =
+    Seq("add", "remove", "metaData", "protocol", "txn", "domainMetadata")
+
+  /** Checkpoint row shape of the driver fold: one canonical column per
+    * action kind.
+    */
+  private val CheckpointSchema: StructType =
+    StructType(CheckpointActionKinds.map(k => StructField(k, CanonicalActionTypes(k))))
+
   def writeCheckpoint(spark: SparkSession, path: String, version: Long,
       rowsPerPart: Int = 1000000,
       removeRetentionMs: Long = DefaultVacuumRetentionMs,
       snapshotDriverMaxBytes: Long = SnapshotDriverMaxBytes): Unit = {
     val tbl = new HPath(path)
     val fs = tbl.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // the fold keeps add/metaData/protocol/txn rows ONLY — on a table
-    // the fold carries add/metaData/protocol/txn AND domainMetadata
-    // (newest per domain — row tracking's high-water mark survives), so
-    // row-tracked tables checkpoint fine (rowIdsHandled); an unknown v7
-    // feature hanging state off other action kinds still refuses.
+    // the fold carries add/remove/metaData/protocol/txn AND
+    // domainMetadata (newest per domain — row tracking's high-water mark
+    // survives), so row-tracked tables checkpoint fine (rowIdsHandled);
+    // an unknown v7 feature hanging state off other action kinds still
+    // refuses.
     requireWriterCapability(spark, fs, tbl, "write_checkpoint",
       adds = false, removes = false, rewrites = true,
       rowIdsHandled = true)
@@ -3475,64 +3485,8 @@ object DeltaLog {
     // a `<` filter would silently fold from the surviving tail only and
     // drop every older add
     val prevCp = lastCheckpointVersion(fs, log).filter(_ <= version)
-    val prev = prevCp.flatMap(v => readCheckpoint(spark, fs, log, v))
     val commits = existingVersions(fs, log)
       .filter(v => v <= version && prevCp.forall(v > _))
-      .map(v => new HPath(log, commitName(v)).toString)
-    // a same-version REWRITE folds from the checkpoint alone — zero
-    // post-checkpoint commits, and spark.read.json of an empty path list
-    // cannot infer a schema
-    val logF =
-      if (commits.nonEmpty) spark.read.json(commits: _*)
-        .withColumn("graft_f", org.apache.spark.sql.functions.input_file_name())
-      else spark.range(0)
-        .select(lit(null).cast("string").as("graft_f"))
-    def part(df: DataFrame, c: String): Option[DataFrame] =
-      if (df.columns.contains(c)) Some(df.where(col(c).isNotNull).select(col(c)))
-      else None
-    // survivor set: above the log-size threshold the fold runs
-    // DISTRIBUTEDLY and the semi/anti-joins below consume its DataFrame
-    // — the driver holds ONE count, never a LocalRelation of the add
-    // set (a 10⁷-file table's path list alone is ~GBs); small logs keep
-    // the driver fold (cheaper than three extra jobs over the log)
-    val sess = spark
-    import sess.implicits._
-    val (activeDf, activeCount): (DataFrame, Long) =
-      if (snapshotLogBytes(fs, log, Some(version)) > snapshotDriverMaxBytes) {
-        val snap = activeAddsDfAsOf(spark, path, Some(version))
-          .map(_.select(col("graft_path").as("graft_active_path"))
-            .localCheckpoint(true)) // consumed 3× (semi, anti, count)
-          .getOrElse(Seq.empty[String].toDF("graft_active_path"))
-        (snap, snap.count())
-      } else {
-        val activeRels = activeAddsAsOf(spark, path, Some(version)).map(_.rel)
-        (activeRels.toDF("graft_active_path"), activeRels.length.toLong)
-      }
-    // recency: previous-checkpoint rows are older than every replayed
-    // commit; commit rows rank by their version (from the file name)
-    // both sides canonicalize BEFORE the union: a previous checkpoint
-    // stores canonical types (maps) while commit JSONs infer structs —
-    // a raw union of the two shapes would not resolve
-    val prevAdds = prev.flatMap(p =>
-      if (!p.columns.contains("add")) None
-      else Some(p.where(col("add").isNotNull)
-        .select(canonicalAction("add"), lit(-1L).as("graft_rec"))))
-    val commitAdds =
-      if (!logF.columns.contains("add")) None
-      else Some(logF.where(col("add").isNotNull).select(canonicalAction("add"),
-        org.apache.spark.sql.functions.regexp_extract(col("graft_f"),
-          "(\\d{20})\\.json", 1).cast("long").as("graft_rec")))
-    val adds = (prevAdds.toSeq ++ commitAdds.toSeq)
-      .reduceOption(_.unionByName(_, allowMissingColumns = true))
-      .map { u =>
-        val alive = u.join(activeDf,
-          u("add.path") === activeDf("graft_active_path"), "left_semi")
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("add.path")).orderBy(col("graft_rec").desc)
-        alive.withColumn("graft_rn",
-            org.apache.spark.sql.functions.row_number().over(w))
-          .where(col("graft_rn") === 1).select(col("add"))
-      }
     // remove TOMBSTONES within the retention window (protocol: "a
     // checkpoint must contain remove actions whose deletionTimestamp is
     // newer than the retention boundary" — foreign vacuum bookkeeping
@@ -3553,80 +3507,18 @@ object DeltaLog {
         .flatMap(parseDeltaInterval)
         .getOrElse(removeRetentionMs)
     val removeCutoff = System.currentTimeMillis() - effectiveRetentionMs
-    val prevRemoves = prev.flatMap(p =>
-      if (!p.columns.contains("remove")) None
-      else Some(p.where(col("remove").isNotNull)
-        .select(canonicalAction("remove"), lit(-1L).as("graft_rec"))))
-    val commitRemoves =
-      if (!logF.columns.contains("remove")) None
-      else Some(logF.where(col("remove").isNotNull)
-        .select(canonicalAction("remove"),
-          org.apache.spark.sql.functions.regexp_extract(col("graft_f"),
-            "(\\d{20})\\.json", 1).cast("long").as("graft_rec")))
-    val removes = (prevRemoves.toSeq ++ commitRemoves.toSeq)
-      .reduceOption(_.unionByName(_, allowMissingColumns = true))
-      .map { u =>
-        val dead = u.join(activeDf,
-          u("remove.path") === activeDf("graft_active_path"), "left_anti")
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("remove.path")).orderBy(col("graft_rec").desc)
-        dead.withColumn("graft_rn",
-            org.apache.spark.sql.functions.row_number().over(w))
-          .where(col("graft_rn") === 1 &&
-            (col("remove.deletionTimestamp").isNull ||
-              col("remove.deletionTimestamp") >= lit(removeCutoff)))
-          .select(col("remove"))
-      }
-    // newest metaData/protocol: commits win over the previous checkpoint
-    def newest(c: String): Option[DataFrame] =
-      part(logF.orderBy(col("graft_f").desc), c).map(_.limit(1))
-        .filter(!_.isEmpty) // probe runs on the 1-row plan, not the full log
-        .orElse(prev.flatMap(part(_, c)).map(_.limit(1)))
-        .map(_.select(canonicalAction(c)))
-    // SetTransaction watermarks must survive log cleanup (the delta spec
-    // retains them in checkpoints): fold to the newest version per appId
-    val txns = (prev.flatMap(part(_, "txn")).toSeq ++ part(logF, "txn").toSeq)
-      .map(_.select(canonicalAction("txn")))
-      .reduceOption(_.unionByName(_, allowMissingColumns = true))
-      .map { df =>
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("txn.appId"))
-          .orderBy(col("txn.version").desc)
-        df.withColumn("graft_rn",
-            org.apache.spark.sql.functions.row_number().over(w))
-          .where(col("graft_rn") === 1).drop("graft_rn")
-      }
-    // domainMetadata state (row tracking's high-water mark and any
-    // foreign domain) must survive the fold like txn watermarks do —
-    // newest action per domain wins (commit rows rank by version,
-    // previous-checkpoint rows are older), a removed=true tombstone
-    // drops the domain from the checkpoint
-    val prevDomains = prev.flatMap(p =>
-      if (!p.columns.contains("domainMetadata")) None
-      else Some(p.where(col("domainMetadata").isNotNull)
-        .select(canonicalAction("domainMetadata"), lit(-1L).as("graft_rec"))))
-    val commitDomains =
-      if (!logF.columns.contains("domainMetadata")) None
-      else Some(logF.where(col("domainMetadata").isNotNull)
-        .select(canonicalAction("domainMetadata"),
-          org.apache.spark.sql.functions.regexp_extract(col("graft_f"),
-            "(\\d{20})\\.json", 1).cast("long").as("graft_rec")))
-    val domains = (prevDomains.toSeq ++ commitDomains.toSeq)
-      .reduceOption(_.unionByName(_, allowMissingColumns = true))
-      .map { df =>
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("domainMetadata.domain"))
-          .orderBy(col("graft_rec").desc)
-        df.withColumn("graft_rn",
-            org.apache.spark.sql.functions.row_number().over(w))
-          .where(col("graft_rn") === 1 &&
-            !coalesce(col("domainMetadata.removed"), lit(false)))
-          .select(col("domainMetadata"))
-      }
-    val parts = adds.toSeq ++ removes.toSeq ++ newest("metaData").toSeq ++
-      newest("protocol").toSeq ++ txns.toSeq ++ domains.toSeq
-    val snapshot = parts
-      .reduce(_.unionByName(_, allowMissingColumns = true))
+    // route: a log under snapshotDriverMaxBytes folds on the driver (one
+    // collect of the previous checkpoint, Jackson over the commits — the
+    // write below is then the only job); a larger log folds as a
+    // distributed plan, so the driver never holds the add set (a
+    // 10⁷-file table's path list alone is ~GBs)
+    val fold =
+      if (snapshotLogBytes(fs, log, Some(version)) <= snapshotDriverMaxBytes)
+        driverCheckpointFold(spark, fs, log, path, prevCp, commits, removeCutoff)
+      else distributedCheckpointFold(spark, fs, log, path, version, prevCp,
+        commits, removeCutoff)
+    val snapshot = fold.snapshot
+    val activeCount = fold.adds
     // small snapshots → the classic single file; past rowsPerPart active
     // files → the multi-part `%020d.checkpoint.%010d.%010d.parquet`
     // layout real delta uses, because coalesce(1) would serialize
@@ -3729,12 +3621,10 @@ object DeltaLog {
       fs.delete(mTmp, true)
       // size = file actions (adds + retained tombstones) + the manifest's
       // non-file action lines (checkpointMetadata/sidecar rows excluded)
-      val tombstoneCount = removes.map(_.count()).getOrElse(0L)
-      activeCount.toLong + tombstoneCount +
-        manifestLines.length - sidecars.length - 1
+      fold.rows.getOrElse(activeCount + fold.tombstones() +
+        manifestLines.length - sidecars.length - 1)
     } else {
-    (if (nParts == 1) snapshot.coalesce(1) else snapshot.repartition(nParts))
-      .write.mode("overwrite").parquet(tmpDir.toString)
+    fold.inParts(nParts).write.mode("overwrite").parquet(tmpDir.toString)
     val written = fs.listStatus(tmpDir).toSeq
       .filter(s => s.getPath.getName.startsWith("part-") &&
         s.getPath.getName.endsWith(".parquet"))
@@ -3758,9 +3648,10 @@ object DeltaLog {
       }
     }
     fs.delete(tmpDir, true)
-    // size from the just-written files — not a second full log replay
-    readCheckpoint(spark, fs, log, version)
-      .map(_.count()).getOrElse(0L)
+    // size from the fold, else from the just-written files — not a
+    // second full log replay
+    fold.rows.getOrElse(readCheckpoint(spark, fs, log, version)
+      .map(_.count()).getOrElse(0L))
     }
     // "parts" must equal the ACTUAL file count the multi-part names
     // carry (written.size can differ from nParts when a repartition
@@ -3772,6 +3663,206 @@ object DeltaLog {
     try lc.write(
       s"""{"version":$version,"size":$size$partsField}""".getBytes("UTF-8"))
     finally lc.close()
+  }
+
+  /** A folded checkpoint snapshot: its action rows as one frame, the
+    * same rows in `n` partitions (one part file each), the live-add
+    * count (sizes the part layout), the retained-tombstone count (lazy —
+    * only a v2 checkpoint's `size` needs it) and, when the fold knows
+    * it, the row count (`_last_checkpoint`'s `size`).
+    */
+  private final case class CheckpointFold(snapshot: DataFrame,
+      inParts: Int => DataFrame, adds: Long, tombstones: () => Long,
+      rows: Option[Long])
+
+  /** [[writeCheckpoint]]'s fold on the driver, for logs under
+    * `snapshotDriverMaxBytes`: the previous checkpoint's rows, then the
+    * commit lines after it, replay in order ([[replayActions]]) under
+    * the rules of [[distributedCheckpointFold]] — the newest add per live
+    * path; the newest remove per dead path, kept inside the retention
+    * window; the newest metaData and protocol; the highest-version txn
+    * per appId; the newest domainMetadata per domain unless removed. The
+    * action lines become a frame through a declared-schema JSON read of
+    * local data, so no job runs before the checkpoint write; `n` parts
+    * are `n` contiguous, non-empty slices of the lines (n ≤ adds).
+    */
+  private def driverCheckpointFold(spark: SparkSession, fs: FileSystem,
+      log: HPath, path: String, prevCp: Option[Long], commits: Seq[Long],
+      removeCutoff: Long): CheckpointFold = {
+    import com.fasterxml.jackson.databind.JsonNode
+    import scala.collection.mutable.LinkedHashMap
+    val adds = LinkedHashMap.empty[String, JsonNode]
+    val removes = LinkedHashMap.empty[String, JsonNode]
+    val txns = LinkedHashMap.empty[Option[String], JsonNode]
+    val domains = LinkedHashMap.empty[Option[String], JsonNode]
+    var metaData, protocol = Option.empty[JsonNode]
+    def field(a: JsonNode, f: String): Option[JsonNode] =
+      Option(a.get(f)).filterNot(_.isNull)
+    def txnVersion(t: JsonNode): Long =
+      field(t, "version").fold(Long.MinValue)(_.asLong)
+    replayActions(spark, fs, log, path, prevCp, commits,
+        CheckpointActionKinds, CheckpointActionKinds) {
+      case ("add", a) => field(a, "path").foreach(p => adds(p.asText) = a)
+      case ("remove", r) => field(r, "path").foreach { p =>
+        adds -= p.asText
+        removes(p.asText) = r
+      }
+      case ("metaData", m) => metaData = Some(m)
+      case ("protocol", p) => protocol = Some(p)
+      case ("txn", t) =>
+        val app = field(t, "appId").map(_.asText)
+        if (txns.get(app).forall(o => txnVersion(t) >= txnVersion(o)))
+          txns(app) = t
+      case ("domainMetadata", d) => domains(field(d, "domain").map(_.asText)) = d
+      case _ =>
+    }
+    val tombstones = removes.collect { case (p, r) if !adds.contains(p) &&
+      field(r, "deletionTimestamp").forall(_.asLong >= removeCutoff) => r }
+    def lines(kind: String, actions: Iterable[JsonNode]): Iterable[String] =
+      actions.map(a => s"""{"$kind":$a}""")
+    val all = (lines("add", adds.values) ++ lines("remove", tombstones) ++
+      lines("metaData", metaData) ++ lines("protocol", protocol) ++
+      lines("txn", txns.values) ++ lines("domainMetadata", domains.values
+        .filterNot(d => field(d, "removed").exists(_.asBoolean)))).toSeq
+    val sess = spark
+    import sess.implicits._
+    def inParts(n: Int): DataFrame = spark.read.schema(CheckpointSchema)
+      .json(spark.sparkContext.parallelize(all, n).toDS())
+    CheckpointFold(inParts(1), inParts, adds.size.toLong,
+      () => tombstones.size.toLong, Some(all.size.toLong))
+  }
+
+  /** [[writeCheckpoint]]'s fold as a Spark plan over the previous
+    * checkpoint ∪ the commit JSONs after it, for logs past
+    * `snapshotDriverMaxBytes`: the driver holds counts and a handful of
+    * non-file rows, never the add set.
+    */
+  private def distributedCheckpointFold(spark: SparkSession, fs: FileSystem,
+      log: HPath, path: String, version: Long, prevCp: Option[Long],
+      commits: Seq[Long], removeCutoff: Long): CheckpointFold = {
+    val prev = prevCp.flatMap(v => readCheckpoint(spark, fs, log, v))
+    val commitFiles = commits.map(v => new HPath(log, commitName(v)).toString)
+    // a same-version REWRITE folds from the checkpoint alone — zero
+    // post-checkpoint commits, and spark.read.json of an empty path list
+    // cannot infer a schema
+    val logF =
+      if (commitFiles.nonEmpty) spark.read.json(commitFiles: _*)
+        .withColumn("graft_f", org.apache.spark.sql.functions.input_file_name())
+      else spark.range(0)
+        .select(lit(null).cast("string").as("graft_f"))
+    def part(df: DataFrame, c: String): Option[DataFrame] =
+      if (df.columns.contains(c)) Some(df.where(col(c).isNotNull).select(col(c)))
+      else None
+    // survivor set: the fold runs DISTRIBUTEDLY and the semi/anti-joins
+    // below consume its DataFrame — the driver holds ONE count, never a
+    // LocalRelation of the add set
+    val sess = spark
+    import sess.implicits._
+    val activeDf = activeAddsDfAsOf(spark, path, Some(version))
+      .map(_.select(col("graft_path").as("graft_active_path"))
+        .localCheckpoint(true)) // consumed 3× (semi, anti, count)
+      .getOrElse(Seq.empty[String].toDF("graft_active_path"))
+    // recency: previous-checkpoint rows are older than every replayed
+    // commit; commit rows rank by their version (from the file name)
+    // both sides canonicalize BEFORE the union: a previous checkpoint
+    // stores canonical types (maps) while commit JSONs infer structs —
+    // a raw union of the two shapes would not resolve
+    val prevAdds = prev.flatMap(p =>
+      if (!p.columns.contains("add")) None
+      else Some(p.where(col("add").isNotNull)
+        .select(canonicalAction("add"), lit(-1L).as("graft_rec"))))
+    val commitAdds =
+      if (!logF.columns.contains("add")) None
+      else Some(logF.where(col("add").isNotNull).select(canonicalAction("add"),
+        org.apache.spark.sql.functions.regexp_extract(col("graft_f"),
+          "(\\d{20})\\.json", 1).cast("long").as("graft_rec")))
+    val adds = (prevAdds.toSeq ++ commitAdds.toSeq)
+      .reduceOption(_.unionByName(_, allowMissingColumns = true))
+      .map { u =>
+        val alive = u.join(activeDf,
+          u("add.path") === activeDf("graft_active_path"), "left_semi")
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy(col("add.path")).orderBy(col("graft_rec").desc)
+        alive.withColumn("graft_rn",
+            org.apache.spark.sql.functions.row_number().over(w))
+          .where(col("graft_rn") === 1).select(col("add"))
+      }
+    val prevRemoves = prev.flatMap(p =>
+      if (!p.columns.contains("remove")) None
+      else Some(p.where(col("remove").isNotNull)
+        .select(canonicalAction("remove"), lit(-1L).as("graft_rec"))))
+    val commitRemoves =
+      if (!logF.columns.contains("remove")) None
+      else Some(logF.where(col("remove").isNotNull)
+        .select(canonicalAction("remove"),
+          org.apache.spark.sql.functions.regexp_extract(col("graft_f"),
+            "(\\d{20})\\.json", 1).cast("long").as("graft_rec")))
+    val removes = (prevRemoves.toSeq ++ commitRemoves.toSeq)
+      .reduceOption(_.unionByName(_, allowMissingColumns = true))
+      .map { u =>
+        val dead = u.join(activeDf,
+          u("remove.path") === activeDf("graft_active_path"), "left_anti")
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy(col("remove.path")).orderBy(col("graft_rec").desc)
+        dead.withColumn("graft_rn",
+            org.apache.spark.sql.functions.row_number().over(w))
+          .where(col("graft_rn") === 1 &&
+            (col("remove.deletionTimestamp").isNull ||
+              col("remove.deletionTimestamp") >= lit(removeCutoff)))
+          .select(col("remove"))
+      }
+    // newest metaData/protocol: commits win over the previous checkpoint
+    def newest(c: String): Option[DataFrame] =
+      part(logF.orderBy(col("graft_f").desc), c).map(_.limit(1))
+        .filter(!_.isEmpty) // probe runs on the 1-row plan, not the full log
+        .orElse(prev.flatMap(part(_, c)).map(_.limit(1)))
+        .map(_.select(canonicalAction(c)))
+    // SetTransaction watermarks must survive log cleanup (the delta spec
+    // retains them in checkpoints): fold to the newest version per appId
+    val txns = (prev.flatMap(part(_, "txn")).toSeq ++ part(logF, "txn").toSeq)
+      .map(_.select(canonicalAction("txn")))
+      .reduceOption(_.unionByName(_, allowMissingColumns = true))
+      .map { df =>
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy(col("txn.appId"))
+          .orderBy(col("txn.version").desc)
+        df.withColumn("graft_rn",
+            org.apache.spark.sql.functions.row_number().over(w))
+          .where(col("graft_rn") === 1).drop("graft_rn")
+      }
+    // domainMetadata state (row tracking's high-water mark and any
+    // foreign domain) must survive the fold like txn watermarks do —
+    // newest action per domain wins (commit rows rank by version,
+    // previous-checkpoint rows are older), a removed=true tombstone
+    // drops the domain from the checkpoint
+    val prevDomains = prev.flatMap(p =>
+      if (!p.columns.contains("domainMetadata")) None
+      else Some(p.where(col("domainMetadata").isNotNull)
+        .select(canonicalAction("domainMetadata"), lit(-1L).as("graft_rec"))))
+    val commitDomains =
+      if (!logF.columns.contains("domainMetadata")) None
+      else Some(logF.where(col("domainMetadata").isNotNull)
+        .select(canonicalAction("domainMetadata"),
+          org.apache.spark.sql.functions.regexp_extract(col("graft_f"),
+            "(\\d{20})\\.json", 1).cast("long").as("graft_rec")))
+    val domains = (prevDomains.toSeq ++ commitDomains.toSeq)
+      .reduceOption(_.unionByName(_, allowMissingColumns = true))
+      .map { df =>
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy(col("domainMetadata.domain"))
+          .orderBy(col("graft_rec").desc)
+        df.withColumn("graft_rn",
+            org.apache.spark.sql.functions.row_number().over(w))
+          .where(col("graft_rn") === 1 &&
+            !coalesce(col("domainMetadata.removed"), lit(false)))
+          .select(col("domainMetadata"))
+      }
+    val parts = adds.toSeq ++ removes.toSeq ++ newest("metaData").toSeq ++
+      newest("protocol").toSeq ++ txns.toSeq ++ domains.toSeq
+    val snapshot = parts.reduce(_.unionByName(_, allowMissingColumns = true))
+    CheckpointFold(snapshot,
+      n => if (n == 1) snapshot.coalesce(1) else snapshot.repartition(n),
+      activeDf.count(), () => removes.map(_.count()).getOrElse(0L), None)
   }
 
   /** Parquet path(s) of checkpoint `v`: the classic single
@@ -3860,19 +3951,27 @@ object DeltaLog {
     * unioned with the file actions of its sidecar parquets, so every
     * fold consumer sees one frame regardless of layout. None when the
     * version has no checkpoint files.
+    *
+    * Parquet reads carry the first file's footer schema, read on the
+    * driver with the footer-to-schema conversion Spark's inference job
+    * runs — the same schema, without that job.
     */
   private def readCheckpoint(spark: SparkSession, fs: FileSystem,
       log: HPath, v: Long): Option[DataFrame] = {
+    def parquet(files: Seq[String]): DataFrame =
+      org.apache.spark.sql.execution.datasources.parquet.GraftParquetShim
+        .footerSchema(spark, fs.getFileStatus(new HPath(files.head)))
+        .fold(spark.read)(spark.read.schema).parquet(files: _*)
     val paths = checkpointPaths(fs, log, v)
-    if (paths.nonEmpty) return Some(spark.read.parquet(paths: _*))
+    if (paths.nonEmpty) return Some(parquet(paths))
     v2ManifestPath(fs, log, v).map { m =>
       val manifest =
         if (m.getName.endsWith(".json")) spark.read.json(m.toString)
-        else spark.read.parquet(m.toString)
+        else parquet(Seq(m.toString))
       val sidecars = v2SidecarPaths(fs, log, manifest)
       if (sidecars.isEmpty) manifest
       else manifest.drop("sidecar").unionByName(
-        spark.read.parquet(sidecars: _*), allowMissingColumns = true)
+        parquet(sidecars), allowMissingColumns = true)
     }
   }
 
@@ -3889,10 +3988,9 @@ object DeltaLog {
 
   /** Table dir has a delta log → snapshot = adds − removes, replayed from
     * the newest checkpoint (if any) plus only the commits after it — old
-    * commits may have been cleaned up. Parsing uses Spark's own JSON/
-    * parquet readers (tiny driver-side jobs, no extra dependency); our
-    * writer never emits removes but replaying them keeps the reader
-    * correct on logs other writers produced.
+    * commits may have been cleaned up. Commit lines parse on the driver
+    * (Jackson, no Spark job); a checkpoint costs one Spark job, the
+    * collect of its action rows ([[replayActions]]).
     */
   def activeFiles(spark: SparkSession, path: String): Seq[String] =
     activeFilesAsOf(spark, path, None)
@@ -3970,39 +4068,11 @@ object DeltaLog {
           s"version $v does not exist in $path (versions: " +
             s"${existingVersions(fs, log).mkString(", ")})")
     }
-    import com.fasterxml.jackson.databind.ObjectMapper
-    val mapper = new ObjectMapper()
-    def entryOf(node: com.fasterxml.jackson.databind.JsonNode) =
-      parseAddEntry(node)
     val cpVersion = lastCheckpointVersion(fs, log)
       .filter(cp => versionAsOf.forall(cp <= _))
-    // checkpoint adds round-trip through to_json so commit-line adds and
-    // checkpointed adds parse identically (stats stays the JSON string the
-    // writer recorded)
-    val cpAdds: Seq[DeltaStats.AddEntry] = cpVersion.toSeq.flatMap { v =>
-      val cp = readCheckpoint(spark, fs, log, v).getOrElse(
-        throw graft.GraftError.InvalidOperation("load_delta",
-          s"$path: _last_checkpoint names version $v but no checkpoint " +
-            "parquet files exist"))
-      if (cp.columns.contains("add"))
-        cp.where(col("add").isNotNull)
-          .select(org.apache.spark.sql.functions.to_json(col("add")))
-          .collect().flatMap { r =>
-            val node = try mapper.readTree(r.getString(0)) catch { case _: Exception => null }
-            Option(node).flatMap(entryOf)
-          }.toSeq
-      else Nil
-    }
     val commits = existingVersions(fs, log)
       .filter(v => cpVersion.forall(v > _) && versionAsOf.forall(v <= _))
-    if (commits.isEmpty && cpAdds.isEmpty) return Nil
-    // Fold commits in VERSION ORDER — a path removed at v2 and re-added at
-    // v5 (RESTORE does exactly this) must end active; a global
-    // adds-minus-removes set would keep it dead forever. Driver-side
-    // Jackson parse: commit files are tiny, and checkpoints bound how many
-    // replay.
-    val active = scala.collection.mutable.LinkedHashMap.empty[String, DeltaStats.AddEntry]
-    cpAdds.foreach(a => active(a.rel) = a)
+    if (commits.isEmpty && cpVersion.isEmpty) return Nil
     // Protocol-fidelity guards: a table written under a newer reader
     // protocol would be silently MISREAD by plain adds-minus-removes
     // replay — physical column names returned raw (id-mode column
@@ -4035,41 +4105,73 @@ object DeltaLog {
     val cmMode = columnMappingMode(spark, fs, tbl)
     guard(cmMode != "none" && cmMode != "name" && cmMode != "id",
       s"column mapping mode '$cmMode'")
-    cpVersion.foreach { v =>
-      val cp = readCheckpoint(spark, fs, log, v).getOrElse(
+    // Fold in VERSION ORDER — a path removed at v2 and re-added at v5
+    // (RESTORE does exactly this) must end active; a global
+    // adds-minus-removes set would keep it dead forever
+    val active = scala.collection.mutable.LinkedHashMap.empty[String, DeltaStats.AddEntry]
+    replayActions(spark, fs, log, path, cpVersion, commits,
+        kinds = Seq("add", "remove", "protocol", "metaData"),
+        checkpointKinds = Seq("add", "protocol")) {
+      case ("add", add) => parseAddEntry(add).foreach(a => active(a.rel) = a)
+      case ("remove", rem) =>
+        if (rem.get("path") != null) active -= rem.get("path").asText
+      case ("protocol", proto) => guardProtocol(proto)
+      case ("metaData", meta) =>
+        if (meta.get("configuration") != null) {
+          val cm = meta.get("configuration").get("delta.columnMapping.mode")
+          guard(cm != null && cm.asText("none") != "none" &&
+            cm.asText("none") != "name" && cm.asText("none") != "id",
+            s"column mapping mode '${Option(cm).map(_.asText).getOrElse("")}'")
+        }
+      case _ =>
+    }
+    active.values.toSeq
+  }
+
+  /** Driver-side replay of a log: the action rows of checkpoint `cp`
+    * (ONE collect, each action column to_json'ed so checkpoint rows parse
+    * exactly like commit lines — stats stays the JSON string the writer
+    * recorded), then the lines of `commits` in version order (Jackson —
+    * commit files are tiny, and checkpoints bound how many replay).
+    * `visit(kind, action)` sees each action of `checkpointKinds` in the
+    * checkpoint, then each of `kinds` in the commits, oldest first — so
+    * a later visit is always the newer action. Unparseable lines are
+    * skipped.
+    */
+  private def replayActions(spark: SparkSession, fs: FileSystem, log: HPath,
+      path: String, cp: Option[Long], commits: Seq[Long], kinds: Seq[String],
+      checkpointKinds: Seq[String])(
+      visit: (String, com.fasterxml.jackson.databind.JsonNode) => Unit): Unit = {
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    def parse(json: String) =
+      try Option(mapper.readTree(json)) catch { case _: Exception => None }
+    cp.foreach { v =>
+      val df = readCheckpoint(spark, fs, log, v).getOrElse(
         throw graft.GraftError.InvalidOperation("load_delta",
           s"$path: _last_checkpoint names version $v but no checkpoint " +
             "parquet files exist"))
-      if (cp.columns.contains("protocol")) {
-        cp.where(col("protocol").isNotNull)
-          .select(org.apache.spark.sql.functions.to_json(col("protocol")))
+      val present = checkpointKinds.filter(df.columns.contains)
+      if (present.nonEmpty)
+        df.where(present.map(col(_).isNotNull).reduce(_ || _))
+          .select(present.map(c =>
+            org.apache.spark.sql.functions.to_json(col(c))): _*)
           .collect().foreach { r =>
-            val node = try mapper.readTree(r.getString(0)) catch { case _: Exception => null }
-            if (node != null) guardProtocol(node)
+            present.indices.foreach { i =>
+              if (!r.isNullAt(i))
+                parse(r.getString(i)).foreach(visit(present(i), _))
+            }
           }
-      }
     }
     commits.foreach { v =>
       readString(fs, new HPath(log, commitName(v))).linesIterator.foreach { line =>
-        val node = try mapper.readTree(line) catch { case _: Exception => null }
-        if (node != null) {
-          val add = node.get("add")
-          val rem = node.get("remove")
-          val proto = node.get("protocol")
-          val meta = node.get("metaData")
-          if (proto != null) guardProtocol(proto)
-          if (meta != null && meta.get("configuration") != null) {
-            val cm = meta.get("configuration").get("delta.columnMapping.mode")
-            guard(cm != null && cm.asText("none") != "none" &&
-              cm.asText("none") != "name" && cm.asText("none") != "id",
-              s"column mapping mode '${Option(cm).map(_.asText).getOrElse("")}'")
+        parse(line).foreach { node =>
+          kinds.foreach { k =>
+            val a = node.get(k)
+            if (a != null && !a.isNull) visit(k, a)
           }
-          if (add != null) entryOf(add).foreach(a => active(a.rel) = a)
-          if (rem != null && rem.get("path") != null) active -= rem.get("path").asText
         }
       }
     }
-    active.values.toSeq
   }
 
   /** Bytes of log state a snapshot fold must consume: the checkpoint
@@ -4110,7 +4212,9 @@ object DeltaLog {
     * while the distributed route keeps the driver to the bare file-path
     * list (the irreducible input to Spark's parquet scan) plus the
     * DV-bearing entries. 64 MB of raw log ≈ a few 10⁵ add actions —
-    * small logs stay on the zero-job fast path.
+    * small logs stay on the driver fold, which runs no Spark job over
+    * commit JSON and one collect per checkpoint read; [[writeCheckpoint]]
+    * folds such logs on the driver too, leaving one write job.
     */
   private[sources] val SnapshotDriverMaxBytes: Long = 64L << 20
 

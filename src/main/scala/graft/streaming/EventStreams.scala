@@ -389,37 +389,40 @@ object EventStreams {
     // micro-batch must open/commit; 32 one-core instances at local bench
     // scale is mostly fixed cost). Separately-named drill in Bench — the
     // default-sized drill keeps its methodology. Prior conf restored.
+    // every conf set happens inside the try, so a failing start()
+    // restores them too
     val priorShuffle = spark.conf.getOption("spark.sql.shuffle.partitions")
-    if (statePartitions > 0)
-      spark.conf.set("spark.sql.shuffle.partitions", statePartitions)
     val prior = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // changelog checkpointing (Spark 3.4+): commit uploads the batch's
-    // changelog instead of a full RocksDB snapshot — the standard
-    // production setting for exactly the per-micro-batch fixed cost this
-    // drill measures (optimization guide §1.2: fix the algorithmic cost,
-    // here per-commit I/O, before configs). State semantics identical;
-    // snapshots still happen in the background at the maintenance
-    // interval.
     val priorChangelog = spark.conf.getOption(
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled")
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-      "true")
     val outRows = new java.util.concurrent.atomic.AtomicLong(0L)
     val t0 = System.nanoTime()
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(src)
-    val q = runningUserStatsTws(stream, "user_id")(spark)
-      .writeStream.outputMode("update")
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .foreachBatch { (df: Dataset[Row], _: Long) =>
-        outRows.addAndGet(df.count()); ()
-      }
-      .start()
-    try q.processAllAvailable() finally {
-      q.stop()
+    try {
+      if (statePartitions > 0)
+        spark.conf.set("spark.sql.shuffle.partitions", statePartitions)
+      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      // changelog checkpointing (Spark 3.4+): commit uploads the batch's
+      // changelog instead of a full RocksDB snapshot — the standard
+      // production setting for exactly the per-micro-batch fixed cost this
+      // drill measures (optimization guide §1.2: fix the algorithmic cost,
+      // here per-commit I/O, before configs). State semantics identical;
+      // snapshots still happen in the background at the maintenance
+      // interval.
+      spark.conf.set(
+        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
+        "true")
+      val stream = spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1).parquet(src)
+      val q = runningUserStatsTws(stream, "user_id")(spark)
+        .writeStream.outputMode("update")
+        .option("checkpointLocation", s"$workDir/ckpt")
+        .foreachBatch { (df: Dataset[Row], _: Long) =>
+          outRows.addAndGet(df.count()); ()
+        }
+        .start()
+      try q.processAllAvailable() finally q.stop()
+    } finally {
       prior match {
         case Some(pv) =>
           spark.conf.set("spark.sql.streaming.stateStore.providerClass", pv)

@@ -17,17 +17,34 @@ class DeltaCheckpointFoldSpec extends SparkSpec {
   private def tmp(name: String) = s"target/tmp/cpfold/$name"
 
   test("checkpoint+cleanup preserves the snapshot across random op sequences") {
+    // the same seeded sequences on both writeCheckpoint routes: the
+    // driver fold (default threshold) and the distributed plan (0L)
+    val driver = randomFoldSequences(DeltaLog.SnapshotDriverMaxBytes)
+    val distributed = randomFoldSequences(0L)
+    driver.zip(distributed).zipWithIndex.foreach { case ((d, x), i) =>
+      assert(d == x, s"sequence ${i + 1}: the checkpoint routes disagree" +
+        s"\ndriver=$d\ndistributed=$x")
+    }
+  }
+
+  /** _last_checkpoint's (size, parts) of table `p`. */
+  private def lastCheckpoint(p: String): (Long, Option[Long]) = {
+    val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(
+      Files.readString(java.nio.file.Paths.get(p, "_delta_log", "_last_checkpoint")))
+    (node.get("size").asLong, Option(node.get("parts")).map(_.asLong))
+  }
+
+  /** Five seeded random op sequences, each ending in writeCheckpoint on
+    * `route` + cleanupLog; per sequence, the rows read through the final
+    * checkpoint and its _last_checkpoint (size, parts).
+    */
+  private def randomFoldSequences(route: Long)
+      : Seq[(Seq[(Long, String, Double)], (Long, Option[Long]))] = {
     val sp = spark
     import sp.implicits._
     val rng = new scala.util.Random(20260815L)
-    (1 to 5).foreach { seqIdx =>
-      val p = tmp(s"seq_$seqIdx")
-      val pp = java.nio.file.Paths.get(p)
-      if (java.nio.file.Files.exists(pp)) {
-        java.nio.file.Files.walk(pp)
-          .sorted(java.util.Comparator.reverseOrder())
-          .forEach(f => java.nio.file.Files.delete(f))
-      }
+    (1 to 5).map { seqIdx =>
+      val p = wipe(s"seq_${route}_$seqIdx")
       var nextId = 100L
       def batch(n: Int) = {
         val rows = (0 until n).map { _ =>
@@ -44,7 +61,8 @@ class DeltaCheckpointFoldSpec extends SparkSpec {
         // checkpoint then folds FROM a previous checkpoint (recency -1
         // seeding), the other half fold from raw commits only
         if (opIdx == 3 && seqIdx % 2 == 0) {
-          DeltaLog.writeCheckpoint(spark, p, version)
+          DeltaLog.writeCheckpoint(spark, p, version,
+            snapshotDriverMaxBytes = route)
           DeltaLog.cleanupLog(spark, p)
           cleanedBelow = version + 1
         }
@@ -54,8 +72,10 @@ class DeltaCheckpointFoldSpec extends SparkSpec {
               checkpointInterval = 0)
             version += 1
           case 2 => // copy-on-write upsert of a random existing id
+            // (sorted: the pick must not depend on the read's file order,
+            // which a checkpoint route may change)
             val ids = DeltaLog.read(spark, p).select("id")
-              .collect().map(_.getLong(0))
+              .collect().map(_.getLong(0)).sorted
             if (ids.nonEmpty) {
               val target = ids(rng.nextInt(ids.length))
               DeltaLog.upsert(Seq((target, s"upd$target", -1.0))
@@ -79,17 +99,20 @@ class DeltaCheckpointFoldSpec extends SparkSpec {
       val before = DeltaLog.read(spark, p).collect()
         .map(r => (r.getLong(0), r.getString(1), r.getDouble(2)))
         .sorted.toSeq
-      DeltaLog.writeCheckpoint(spark, p, version)
+      DeltaLog.writeCheckpoint(spark, p, version,
+        snapshotDriverMaxBytes = route)
       DeltaLog.cleanupLog(spark, p)
       val after = DeltaLog.read(spark, p).collect()
         .map(r => (r.getLong(0), r.getString(1), r.getDouble(2)))
         .sorted.toSeq
       assert(after == before,
-        s"sequence $seqIdx: checkpoint fold changed the snapshot at " +
-          s"version $version\nbefore=$before\nafter=$after")
+        s"sequence $seqIdx (route $route): checkpoint fold changed the " +
+          s"snapshot at version $version\nbefore=$before\nafter=$after")
+      val checkpoint = lastCheckpoint(p)
       // and the table stays writable after the full cleanup
       DeltaLog.write(batch(1), "append", p, checkpointInterval = 0)
       assert(DeltaLog.read(spark, p).count() == before.size + 1L)
+      (after, checkpoint)
     }
   }
 
@@ -369,5 +392,117 @@ class DeltaCheckpointFoldSpec extends SparkSpec {
     DeltaLog.cleanupLog(spark, p)
     assert(DeltaLog.read(spark, p).collect().map(_.getLong(0)).sorted.toSeq ==
       (3L to 6L))
+  }
+
+  /** One table history per checkpoint route — the driver fold (default
+    * threshold) and the distributed plan (0L): `history(path, route)`
+    * builds the table and returns the version to checkpoint. After
+    * writeCheckpoint + cleanupLog both routes must read the same rows,
+    * write the same _last_checkpoint size/parts and agree on `probe`.
+    * Returns the probe's value.
+    */
+  private def bothRoutes[T](name: String, rowsPerPart: Int = 1000000)(
+      probe: String => T)(history: (String, Long) => Long): T = {
+    val results = Seq(DeltaLog.SnapshotDriverMaxBytes, 0L).map { route =>
+      val p = wipe(s"routes_${name}_$route")
+      val v = history(p, route)
+      DeltaLog.writeCheckpoint(spark, p, v, rowsPerPart = rowsPerPart,
+        snapshotDriverMaxBytes = route)
+      DeltaLog.cleanupLog(spark, p)
+      (DeltaLog.read(spark, p).collect().map(_.mkString("|")).sorted.toSeq,
+        lastCheckpoint(p), probe(p))
+    }
+    assert(results.head == results.last,
+      s"$name: the checkpoint routes disagree\ndriver=${results.head}\n" +
+        s"distributed=${results.last}")
+    results.head._3
+  }
+
+  test("both checkpoint routes write the same checkpoint") {
+    val sp = spark; import sp.implicits._
+    def ids(r: Range) = r.map(i => (i.toLong, s"v$i")).toDF("id", "s")
+    def rowStrings(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.mkString("|")).sorted.toSeq
+    def cpRemoves(p: String, v: Long): Long = {
+      val df = spark.read.parquet(java.nio.file.Paths.get(p, "_delta_log",
+        f"$v%020d.checkpoint.parquet").toString)
+      if (!df.columns.contains("remove")) 0L
+      else df.where(col("remove").isNotNull).count()
+    }
+    // a remove tombstone inside the retention window
+    val tombstones = bothRoutes("tombstone")(cpRemoves(_, 1L)) { (p, _) =>
+      DeltaLog.write(ids(1 to 6).repartition(3), "overwrite", p,
+        checkpointInterval = 0)
+      DeltaLog.deleteWhere(spark, p, "id <= 2")
+      1L
+    }
+    assert(tombstones > 0L)
+    // txn watermarks: the highest version per appId survives the fold
+    val txns = bothRoutes("txn")(p => Seq("app-x", "app-y").map(app =>
+      DeltaLog.latestTxnVersion(spark,
+        new org.apache.hadoop.fs.Path(p).getFileSystem(
+          spark.sparkContext.hadoopConfiguration),
+        new org.apache.hadoop.fs.Path(p, "_delta_log"), app))) { (p, _) =>
+      DeltaLog.write(ids(1 to 2), "overwrite", p, txn = Some(("app-x", 1L)),
+        checkpointInterval = 0)
+      DeltaLog.write(ids(3 to 4), "append", p, txn = Some(("app-x", 2L)),
+        checkpointInterval = 0)
+      DeltaLog.write(ids(5 to 6), "append", p, txn = Some(("app-y", 5L)),
+        checkpointInterval = 0)
+      2L
+    }
+    assert(txns == Seq(Some(2L), Some(5L)))
+    // row tracking: baseRowIds and the domainMetadata high-water mark
+    bothRoutes("rowtracking")(p =>
+        rowStrings(DeltaLog.readWithRowIds(spark, p))) { (p, _) =>
+      DeltaLog.write(ids(1 to 4), "overwrite", p,
+        tableProperties = Map("delta.enableRowTracking" -> "true"),
+        checkpointInterval = 0)
+      DeltaLog.write(ids(5 to 6), "append", p, checkpointInterval = 0)
+      DeltaLog.upsert(Seq((2L, "u2")).toDF("id", "s"), Seq("id"), p)
+      2L
+    }
+    // a null partition value, as the protocol writes it (JSON null)
+    val nullPart = bothRoutes("nullpart")(p =>
+        rowStrings(DeltaLog.readWhere(spark, p, "part IS NULL"))) { (p, _) =>
+      DeltaLog.write(Seq((1L, "a"), (2L, null), (3L, "b")).toDF("id", "part"),
+        "overwrite", p, partitionBy = Seq("part"), checkpointInterval = 0)
+      val commit = java.nio.file.Paths.get(p, "_delta_log", "0" * 20 + ".json")
+      val hiveNull = "\"part\":\"__HIVE_DEFAULT_PARTITION__\""
+      assert(Files.readString(commit).contains(hiveNull))
+      Files.writeString(commit,
+        Files.readString(commit).replace(hiveNull, "\"part\":null"))
+      Files.deleteIfExists(commit.resolveSibling("." + "0" * 20 + ".json.crc"))
+      DeltaLog.write(Seq((4L, "a")).toDF("id", "part"), "append", p,
+        partitionBy = Seq("part"), checkpointInterval = 0)
+      1L
+    }
+    assert(nullPart == Seq("2|null"))
+    // seeding from a previous checkpoint (commits before it cleaned up)
+    bothRoutes("seeded")(_ => ()) { (p, route) =>
+      DeltaLog.write(ids(1 to 4).repartition(2), "overwrite", p,
+        checkpointInterval = 0)
+      DeltaLog.write(ids(5 to 6), "append", p, checkpointInterval = 0)
+      DeltaLog.writeCheckpoint(spark, p, 1L, snapshotDriverMaxBytes = route)
+      DeltaLog.cleanupLog(spark, p)
+      DeltaLog.write(ids(7 to 8), "append", p, checkpointInterval = 0)
+      DeltaLog.deleteWhere(spark, p, "id = 5")
+      3L
+    }
+    // multi-part layout
+    bothRoutes("multipart", rowsPerPart = 2)(_ => ()) { (p, _) =>
+      DeltaLog.write(ids(1 to 9).repartition(9), "overwrite", p,
+        checkpointInterval = 0)
+      DeltaLog.write(ids(10 to 10), "append", p, checkpointInterval = 0)
+      1L
+    }
+    // a v2Checkpoint table (sidecars + manifest)
+    bothRoutes("v2")(_ => ()) { (p, _) =>
+      DeltaLog.write(ids(1 to 6).repartition(2), "overwrite", p,
+        tableProperties = Map("delta.checkpointPolicy" -> "v2"),
+        checkpointInterval = 0)
+      DeltaLog.deleteWhere(spark, p, "id <= 2")
+      1L
+    }
   }
 }

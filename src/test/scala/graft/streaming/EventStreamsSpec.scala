@@ -155,6 +155,26 @@ class EventStreamsSpec extends SparkSpec {
     assert(sec > 0.0)
   }
 
+  test("streamThroughput restores the session conf when start() fails") {
+    // a checkpoint file manager class that does not exist makes the
+    // query's constructor — inside start() — throw, after every conf set
+    val key = "spark.sql.streaming.checkpointFileManagerClass"
+    spark.conf.set(key, "graft.streaming.NoSuchCheckpointFileManager")
+    try {
+      val before = spark.conf.getAll
+      intercept[Exception] {
+        EventStreams.streamThroughput(spark, batch,
+          "target/tmp/stream_tp_failed_start", numShards = 2,
+          statePartitions = 3)
+      }
+      val after = spark.conf.getAll
+      val leaked = (before.keySet ++ after.keySet)
+        .filter(k => before.get(k) != after.get(k))
+        .map(k => s"$k: ${before.get(k)} -> ${after.get(k)}")
+      assert(leaked.isEmpty, leaked.mkString(", "))
+    } finally spark.conf.unset(key)
+  }
+
   test("streaming parquet sink writes append-mode results") {
     val sp = spark; import sp.implicits._
     implicit val sqlCtx = spark.sqlContext
