@@ -765,7 +765,7 @@ class GraftFrame(val df: DataFrame, val alias: String, val state: QueryState) {
         regs.foreach { case (v, d) => d.createOrReplaceTempView(v) }
         try spark.sql(sql)
         catch {
-          case e: Throwable =>
+          case scala.util.control.NonFatal(e) =>
             throw GraftError.translate(e, sql,
               allSources.flatMap(_._2.columns).distinct)
         }
@@ -860,7 +860,8 @@ class GraftFrame(val df: DataFrame, val alias: String, val state: QueryState) {
 
   private def translating[A](f: => A): A =
     try f catch {
-      case e: Throwable => throw GraftError.translate(e, "", df.columns.toSeq)
+      case scala.util.control.NonFatal(e) =>
+        throw GraftError.translate(e, "", df.columns.toSeq)
     }
 
   /** Positional UNION with dedup (src/elusion.rs:1427-1581). */

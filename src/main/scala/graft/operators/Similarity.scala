@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 import graft.functions.{VectorFunctions => V}
+import graft.sources.Loaders
 
 /** Approximate-nearest-neighbor similarity search over an embedding column
   * (SURVEY north-star). Baseline: brute-force cosine top-k with a
@@ -510,7 +511,7 @@ object Similarity {
     */
   private def readIndexLists(spark: org.apache.spark.sql.SparkSession,
       path: String, probed: Array[Any]): DataFrame = {
-    val idx = spark.read.parquet(path)
+    val idx = Loaders.readParquet(spark, path)
     if (!idx.columns.contains("list_bucket")) {
       if (probed == null) idx
       else idx.where(col("list_id").isin(probed.toIndexedSeq: _*))
@@ -601,7 +602,7 @@ object Similarity {
     val cp = new org.apache.hadoop.fs.Path(s"${indexPath}_cmap")
     val fs = mp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(mp) && fs.exists(cp))
-      Some((spark.read.parquet(mp.toString), spark.read.parquet(cp.toString)))
+      Some((Loaders.readParquet(spark, mp.toString), Loaders.readParquet(spark, cp.toString)))
     else None
   }
 
@@ -617,7 +618,7 @@ object Similarity {
   def appendToIvfIndex(indexPath: String, newVectors: DataFrame,
       vecCol: String, idCol: String): Unit = {
     val spark = newVectors.sparkSession
-    val centroids = spark.read.parquet(s"${indexPath}_centroids")
+    val centroids = Loaders.readParquet(spark, s"${indexPath}_centroids")
     val c = newVectors.select(col(idCol).as("corpus_id"), col(vecCol).as("cv"))
     val assigned = assignToLists(c, centroids,
       metaPre = loadMetaPre(spark, indexPath))
@@ -650,7 +651,7 @@ object Similarity {
       vecCol: String, idCol: String, k: Int, nprobe: Int = 4,
       maxProbedLiteral: Int = MaxProbedLiteral): DataFrame = {
     val spark = queries.sparkSession
-    val centroids = spark.read.parquet(s"${indexPath}_centroids")
+    val centroids = Loaders.readParquet(spark, s"${indexPath}_centroids")
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
     val qLists = probeLists(q, centroids, nprobe,
       metaPre = loadMetaPre(spark, indexPath))
@@ -688,7 +689,7 @@ object Similarity {
   def ivfKnnEdges(indexPath: String, vectors: DataFrame, vecCol: String,
       idCol: String, k: Int, nprobe: Int = 4): DataFrame = {
     val spark = vectors.sparkSession
-    val centroids = spark.read.parquet(s"${indexPath}_centroids")
+    val centroids = Loaders.readParquet(spark, s"${indexPath}_centroids")
     val q = vectors.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
     val qLists = probeLists(q, centroids, nprobe,
       metaPre = loadMetaPre(spark, indexPath))
@@ -1084,15 +1085,19 @@ object Similarity {
     * LUT). Slots of dropped centroids are never referenced by any code
     * and fill with 0.
     */
-  private def adcLutFlat(queries: DataFrame, codebook: DataFrame,
+  private[operators] def adcLutFlat(queries: DataFrame, codebook: DataFrame,
       vecCol: String, idCol: String, m: Int, dim: Int,
       ksubHint: Int = -1): DataFrame = {
+    require(ksubHint == -1 || ksubHint >= 1,
+      s"PQ ksub hint must be -1 (derive from the codebook) or >= 1, got $ksubHint")
     // ksubHint skips the driver max() job when the caller KNOWS the
     // trained ksub (the in-process pipelines do): adcSum derives ksub
     // from lut.length/m at lookup time, so any hint ≥ max(cent_id)+1
     // yields bit-identical sums — slots of dropped centroids fill 0 and
-    // are never referenced by any code. Persisted-codebook callers keep
-    // the derive (-1): the codebook's true ksub is not recorded at rest.
+    // are never referenced by any code. A smaller hint would misplace
+    // slots silently, so the LUT job itself checks every cent_id against
+    // it. Persisted-codebook callers keep the derive (-1): the
+    // codebook's true ksub is not recorded at rest.
     val ksub = if (ksubHint >= 1) ksubHint else {
       // read the max as nullable and fail typed: an empty codebook frame
       // would otherwise surface as an opaque NPE from getInt on a null row
@@ -1102,10 +1107,17 @@ object Similarity {
           "persisted codebook parquet, not an empty frame")
       maxCent.getInt(0) + 1
     }
+    val slot = col("subspace") * ksub + col("cent_id")
+    val checkedSlot =
+      if (ksubHint == -1) slot
+      else when(col("cent_id") >= ksub, raise_error(concat(
+        lit(s"PQ ksub hint $ksubHint is too small: the codebook has cent_id "),
+        col("cent_id").cast("string"), lit(s" (hint must be >= max(cent_id) + 1)"))))
+        .otherwise(slot)
     adcLut(queries, codebook, vecCol, idCol, m, dim)
       .groupBy(col("query_id"))
       .agg(map_from_entries(collect_list(struct(
-        (col("subspace") * ksub + col("cent_id")).as("k"), col("d2")))).as("graft_mm"))
+        checkedSlot.as("k"), col("d2")))).as("graft_mm"))
       .select(col("query_id"),
         transform(sequence(lit(0), lit(m * ksub - 1)),
           i => coalesce(element_at(col("graft_mm"), i), lit(0.0d))).as("graft_lut"))
@@ -1159,7 +1171,7 @@ object Similarity {
     */
   def appendToPqIndex(indexPath: String, newVectors: DataFrame,
       vecCol: String, idCol: String, m: Int = 8, dim: Int = 64): Unit = {
-    val cb = newVectors.sparkSession.read.parquet(s"${indexPath}_codebook")
+    val cb = Loaders.readParquet(newVectors.sparkSession, s"${indexPath}_codebook")
     pqEncode(newVectors, vecCol, idCol, cb, m, dim)
       .join(newVectors.select(col(idCol).as("corpus_id"), col(vecCol).as("cv")),
         Seq("corpus_id"))
@@ -1171,8 +1183,8 @@ object Similarity {
       idCol: String, k: Int, m: Int = 8, dim: Int = 64,
       rerank: Int = 50): DataFrame = {
     val spark = queries.sparkSession
-    val cb = spark.read.parquet(s"${indexPath}_codebook")
-    val idx = spark.read.parquet(indexPath)
+    val cb = Loaders.readParquet(spark, s"${indexPath}_codebook")
+    val idx = Loaders.readParquet(spark, indexPath)
     pqTopK(idx.select(col("corpus_id"), col("codes")), cb,
       idx.select(col("corpus_id").as(idCol), col("cv").as(vecCol)),
       queries, vecCol, idCol, k, m, dim, rerank)
@@ -1232,8 +1244,8 @@ object Similarity {
       rerank: Int = 50, maxProbedLiteral: Int = MaxProbedLiteral): DataFrame = {
     require(rerank >= k, "ivfPqTopK: rerank must be >= k")
     val spark = queries.sparkSession
-    val centroids = spark.read.parquet(s"${indexPath}_centroids")
-    val cb = spark.read.parquet(s"${indexPath}_codebook")
+    val centroids = Loaders.readParquet(spark, s"${indexPath}_centroids")
+    val cb = Loaders.readParquet(spark, s"${indexPath}_codebook")
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
     // the probe reuses the index's persisted meta quantizer when present
     // (large-nlist builds write it) — without it every probe re-runs the

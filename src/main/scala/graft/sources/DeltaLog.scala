@@ -3952,26 +3952,21 @@ object DeltaLog {
     * fold consumer sees one frame regardless of layout. None when the
     * version has no checkpoint files.
     *
-    * Parquet reads carry the first file's footer schema, read on the
-    * driver with the footer-to-schema conversion Spark's inference job
-    * runs — the same schema, without that job.
+    * Parquet reads go through [[Loaders.readParquet]]: the schema Spark's
+    * inference job would derive, from one footer read on the driver.
     */
   private def readCheckpoint(spark: SparkSession, fs: FileSystem,
       log: HPath, v: Long): Option[DataFrame] = {
-    def parquet(files: Seq[String]): DataFrame =
-      org.apache.spark.sql.execution.datasources.parquet.GraftParquetShim
-        .footerSchema(spark, fs.getFileStatus(new HPath(files.head)))
-        .fold(spark.read)(spark.read.schema).parquet(files: _*)
     val paths = checkpointPaths(fs, log, v)
-    if (paths.nonEmpty) return Some(parquet(paths))
+    if (paths.nonEmpty) return Some(Loaders.readParquet(spark, paths: _*))
     v2ManifestPath(fs, log, v).map { m =>
       val manifest =
         if (m.getName.endsWith(".json")) spark.read.json(m.toString)
-        else parquet(Seq(m.toString))
+        else Loaders.readParquet(spark, m.toString)
       val sidecars = v2SidecarPaths(fs, log, manifest)
       if (sidecars.isEmpty) manifest
       else manifest.drop("sidecar").unionByName(
-        parquet(sidecars), allowMissingColumns = true)
+        Loaders.readParquet(spark, sidecars: _*), allowMissingColumns = true)
     }
   }
 

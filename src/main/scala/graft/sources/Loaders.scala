@@ -61,9 +61,53 @@ object Loaders {
       s"unsupported file type for $path")
   }
 
-  def loadParquet(spark: SparkSession, path: String, alias: String): GraftFrame =
-    GraftFrame(normalizeNtzTimestamps(normalizeNanoTimestamps(spark, path,
-      spark.read.parquet(path))), alias)
+  /** Lazy parquet load; starts no Spark job. The schema is the one a
+    * schema-less `spark.read.parquet(path)` infers, taken from the same
+    * file's footer read on the driver instead of inside Spark's one-task
+    * inference job: `_common_metadata`, else `_metadata`, else the first
+    * data file in path order of Spark's listing (see [[readParquet]]).
+    * Partition columns are discovered from the directory names as before.
+    */
+  def loadParquet(spark: SparkSession, path: String, alias: String): GraftFrame = {
+    val (df, nanoCols) = parquetFrame(spark, Seq(path))
+    GraftFrame(normalizeNtzTimestamps(normalizeNanoTimestamps(df, nanoCols)), alias)
+  }
+
+  /** `spark.read.parquet(paths: _*)` without the schema-inference job:
+    * the schema inference would derive comes from one footer read on the
+    * driver and is handed to the reader. Falls back to the schema-less
+    * read — so errors stay Spark's own (missing path, empty directory,
+    * corrupt footer) — when the session merges schemas, when the footer
+    * cannot be read or converted, and when a footer column shares its
+    * name with a partition column (a declared schema types such a
+    * column, inference types it from the directory names).
+    */
+  private[graft] def readParquet(spark: SparkSession, paths: String*): DataFrame =
+    parquetFrame(spark, paths)._1
+
+  /** [[readParquet]]'s frame plus the top-level columns the same footer
+    * annotates as TIMESTAMP(NANOS) (see [[normalizeNanoTimestamps]]).
+    */
+  private def parquetFrame(spark: SparkSession,
+      paths: Seq[String]): (DataFrame, Set[String]) = {
+    import org.apache.spark.sql.execution.datasources.parquet.GraftParquetShim
+    val probe =
+      try Right(GraftParquetShim.inferenceFooter(spark, paths))
+      catch { case scala.util.control.NonFatal(e) => Left(e) }
+    val footer = probe.toOption.flatten
+    val sqlConf = spark.sessionState.conf
+    val schema = footer.filterNot(f => sqlConf.isParquetSchemaMergingEnabled ||
+        f.schema.fieldNames.exists(n => f.partitionSchema.fieldNames.exists(sqlConf.resolver(n, _))))
+      .map(_.schema)
+    val df = schema.fold(spark.read)(spark.read.schema).parquet(paths: _*)
+    // the read succeeded where the footer read failed: a missed nano
+    // column must be visible, not indistinguishable from "none" — on a
+    // transient FS error the conversion silently varying between retries
+    // would be nondeterministic corruption
+    probe.left.foreach(e => System.err.println(
+      s"[graft] WARN parquet footer read failed for ${paths.mkString(", ")}: ${e.getMessage}"))
+    (df, footer.fold(Set.empty[String])(f => nanoTsColumns(f.footer)))
+  }
 
   /** Parquet `timestamp` columns written WITHOUT `isAdjustedToUTC` arrive
     * as TIMESTAMP_NTZ in Spark 4. The engine's temporal operators
@@ -110,72 +154,30 @@ object Loaders {
     * Which long columns were nano-timestamps is decided by the parquet
     * FOOTER's logical-type annotation, not a column-name heuristic (a
     * round-2 name test silently corrupted legitimate long columns named
-    * `*_ts`). One footer read of one file, driver-side, via the Hadoop FS
-    * API — works on any filesystem.
+    * `*_ts`) — the footer [[parquetFrame]] reads for the schema.
     */
-  private def nanoTsColumns(spark: SparkSession, path: String): Set[String] = {
-    import org.apache.hadoop.fs.{Path => HPath}
-    try {
-      val conf = spark.sparkContext.hadoopConfiguration
-      val hPath = new HPath(path)
-      val fs = hPath.getFileSystem(conf)
-      val status = fs.getFileStatus(hPath)
-      // a parquet "path" may be a single file, a directory of part files,
-      // or a PARTITIONED directory whose top level holds only col=val
-      // subdirs — walk recursively to the first data file
-      val file: Option[HPath] =
-        if (status.isFile) Some(hPath)
-        else {
-          val it = fs.listFiles(hPath, true)
-          var found: Option[HPath] = None
-          while (found.isEmpty && it.hasNext) {
-            val s = it.next()
-            val name = s.getPath.getName
-            if (s.isFile && name.endsWith(".parquet") && !name.startsWith("."))
-              found = Some(s.getPath)
-          }
-          found
-        }
-      file match {
-        case None => Set.empty
-        case Some(f) =>
-          import org.apache.parquet.hadoop.ParquetFileReader
-          import org.apache.parquet.hadoop.util.HadoopInputFile
-          import org.apache.parquet.schema.LogicalTypeAnnotation
-          import org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit
-          val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
-          try {
-            val schema = reader.getFooter.getFileMetaData.getSchema
-            (0 until schema.getFieldCount).flatMap { i =>
-              val t = schema.getType(i)
-              if (t.isPrimitive) t.getLogicalTypeAnnotation match {
-                case ts: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation
-                    if ts.getUnit == TimeUnit.NANOS => Some(t.getName)
-                case _ => None
-              } else None
-            }.toSet
-          } finally reader.close()
-      }
-    } catch {
-      // a failed probe must be visible, not indistinguishable from "no
-      // nano columns" — on a transient FS error the rewrite silently
-      // varying between retries would be nondeterministic corruption
-      case scala.util.control.NonFatal(e) =>
-        System.err.println(
-          s"[graft] WARN nano-ts footer probe failed for $path: ${e.getMessage}")
-        Set.empty
-    }
+  private def nanoTsColumns(
+      footer: org.apache.parquet.hadoop.metadata.ParquetMetadata): Set[String] = {
+    import org.apache.parquet.schema.LogicalTypeAnnotation
+    import org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit
+    val schema = footer.getFileMetaData.getSchema
+    (0 until schema.getFieldCount).flatMap { i =>
+      val t = schema.getType(i)
+      if (t.isPrimitive) t.getLogicalTypeAnnotation match {
+        case ts: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation
+            if ts.getUnit == TimeUnit.NANOS => Some(t.getName)
+        case _ => None
+      } else None
+    }.toSet
   }
 
-  private def normalizeNanoTimestamps(spark: SparkSession, path: String,
-      df: DataFrame): DataFrame = {
-    lazy val nanoCols = nanoTsColumns(spark, path) // footer read only if longs exist
+  private[sources] def normalizeNanoTimestamps(df: DataFrame,
+      nanoCols: Set[String]): DataFrame =
     df.schema.fields.foldLeft(df) { (d, f) =>
       if (f.dataType == LongType && nanoCols.contains(f.name))
         d.withColumn(f.name, expr(s"timestamp_micros(`${f.name}` div 1000)"))
       else d
     }
-  }
 
   /** Delta read: replay the `_delta_log` snapshot (adds − removes) and
     * read exactly the active files — see [[DeltaLog.read]]. Unlike the
@@ -193,7 +195,7 @@ object Loaders {
     else if (versionAsOf.nonEmpty)
       throw graft.GraftError.InvalidOperation("load_delta",
         s"versionAsOf requires a _delta_log; $path has none")
-    else GraftFrame(normalizeNtzTimestamps(spark.read.parquet(path)), alias)
+    else GraftFrame(normalizeNtzTimestamps(readParquet(spark, path)), alias)
   }
 
   /** Time travel by TIMESTAMP (delta's `timestampAsOf`): the newest

@@ -88,7 +88,7 @@ object Writers {
         // NTZ-normalize the re-read so appending a TIMESTAMP frame onto a
         // file whose footer lacks isAdjustedToUTC doesn't union TS with NTZ
         val existing = Loaders.normalizeNtzTimestamps(
-          df.sparkSession.read.parquet(path))
+          Loaders.readParquet(df.sparkSession, path))
         if (!existing.columns.sorted.sameElements(df.columns.sorted))
           throw graft.GraftError.WriteError(path, "write_to_parquet append",
             s"column mismatch (${existing.columns.mkString(",")} vs ${df.columns.mkString(",")})")

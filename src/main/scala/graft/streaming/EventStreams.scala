@@ -381,8 +381,9 @@ object EventStreams {
     events.select(col("event_id"), col("ts"), col("user_id"),
         col("event_type"), col("value"))
       .repartition(numShards).write.mode("overwrite").parquet(src)
-    val inputRows = spark.read.parquet(src).count()
-    val schema = spark.read.parquet(src).schema
+    val written = graft.sources.Loaders.readParquet(spark, src)
+    val inputRows = written.count()
+    val schema = written.schema
     // statePartitions > 0: size the state-store partition count for the
     // drill (a REAL production dial — the stream's shuffle-partition
     // setting at FIRST checkpoint fixes how many RocksDB instances every

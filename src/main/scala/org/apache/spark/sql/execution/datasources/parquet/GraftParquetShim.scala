@@ -1,20 +1,83 @@
 package org.apache.spark.sql.execution.datasources.parquet
 
-import org.apache.hadoop.fs.FileStatus
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.ParquetFileWriter
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.deploy.SparkHadoopUtil
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.datasources.InMemoryFileIndex
 import org.apache.spark.sql.types.StructType
 
-/** Bridge into `ParquetFileFormat`'s `private[parquet]` footer helpers —
-  * the footer read and footer-to-schema conversion Spark's parquet schema
-  * inference runs inside a job, here called on the driver. Same package
-  * technique as `org.apache.spark.sql.graftshim.GraftSqlShim`.
+/** Spark's parquet schema inference, run on the driver. A schema-less
+  * `spark.read.parquet` lists its paths, picks one file, and reads that
+  * file's footer inside a one-task Spark job. [[inferenceFooter]] picks
+  * the same file by the same rules, reads its footer here and converts it
+  * exactly as the inference job does. The footer helpers are
+  * `private[parquet]` to Spark, hence this package.
+  * Same package technique as `org.apache.spark.sql.graftshim.GraftSqlShim`.
   */
 object GraftParquetShim {
-  /** Spark schema of one parquet file, from its footer. */
-  def footerSchema(spark: SparkSession, file: FileStatus): Option[StructType] =
-    ParquetFileFormat.readSchema(
-      ParquetFileFormat.readParquetFootersInParallel(
-        spark.sparkContext.hadoopConfiguration, Seq(file),
-        ignoreCorruptFiles = false),
-      spark)
+
+  /** What inference reads for one set of paths: the footer, the schema
+    * inference derives from it, and the partition schema of the listing.
+    */
+  final case class InferenceFooter(footer: ParquetMetadata,
+      schema: StructType, partitionSchema: StructType)
+
+  /** The footer Spark's inference reads for `paths` when it does not
+    * merge schemas, with its Spark schema. The candidates are the files
+    * Spark's own listing (`InMemoryFileIndex`, the index a read builds)
+    * hands to inference: hidden `_`/`.` names are excluded, partition
+    * directories are walked. Of those, sorted by path, the pick is
+    * `_common_metadata`, then `_metadata`, then the first data file —
+    * `ParquetUtils.splitFiles`'s rule.
+    *
+    * None when there is no candidate or a path is a glob (the read then
+    * infers as before); listing, footer and conversion errors propagate.
+    * A listing wide enough for Spark to distribute (more than
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` paths or
+    * directories) is distributed here as well.
+    */
+  def inferenceFooter(spark: SparkSession,
+      paths: Seq[String]): Option[InferenceFooter] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val roots = paths.map(new Path(_))
+    if (roots.exists(SparkHadoopUtil.get.isGlobPath)) return None
+    val index = new InMemoryFileIndex(spark,
+      roots.map(p => p.getFileSystem(conf).makeQualified(p)), Map.empty, None)
+    val leaves = index.allFiles().sortBy(_.getPath.toString)
+    def named(name: String): Option[FileStatus] = leaves.find(_.getPath.getName == name)
+    named(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE)
+      .orElse(named(ParquetFileWriter.PARQUET_METADATA_FILE))
+      .orElse(leaves.find { f =>
+        val n = f.getPath.getName
+        n != ParquetFileWriter.PARQUET_COMMON_METADATA_FILE &&
+          n != ParquetFileWriter.PARQUET_METADATA_FILE
+      })
+      .map { f =>
+        val footer = ParquetFooterReader.readFooter(
+          HadoopInputFile.fromStatus(f, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
+        InferenceFooter(footer, footerSchema(spark, footer), index.partitionSchema)
+      }
+  }
+
+  /** The Spark schema of a footer, through the converter schema
+    * inference builds from the session conf (`mergeSchemasInParallel`):
+    * field-id and case-sensitivity settings stay at their defaults there,
+    * so they do here. A footer carrying Spark's own schema string yields
+    * that schema, field metadata included.
+    */
+  private def footerSchema(spark: SparkSession, footer: ParquetMetadata): StructType = {
+    val sql = spark.sessionState.conf
+    ParquetFileFormat.readSchemaFromFooter(
+      new org.apache.parquet.hadoop.Footer(null, footer),
+      new ParquetToSparkSchemaConverter(
+        assumeBinaryIsString = sql.isParquetBinaryAsString,
+        assumeInt96IsTimestamp = sql.isParquetINT96AsTimestamp,
+        inferTimestampNTZ = sql.parquetInferTimestampNTZEnabled,
+        nanosAsLong = sql.legacyParquetNanosAsLong,
+        respectUnknownTypeAnnotation = sql.parquetReaderRespectUnknownTypeAnnotation))
+  }
 }
