@@ -61,12 +61,14 @@ object Loaders {
       s"unsupported file type for $path")
   }
 
-  /** Lazy parquet load; starts no Spark job. The schema is the one a
-    * schema-less `spark.read.parquet(path)` infers, taken from the same
-    * file's footer read on the driver instead of inside Spark's one-task
-    * inference job: `_common_metadata`, else `_metadata`, else the first
-    * data file in path order of Spark's listing (see [[readParquet]]).
-    * Partition columns are discovered from the directory names as before.
+  /** Lazy parquet load; starts no Spark job (a listing wide enough for
+    * Spark to distribute still runs its listing job, as every read does).
+    * The schema is the one a schema-less `spark.read.parquet(path)`
+    * infers, taken from the same file's footer read on the driver instead
+    * of inside Spark's one-task inference job: `_common_metadata`, else
+    * `_metadata`, else the first data file in path order of Spark's
+    * listing (see [[readParquet]]). Partition columns are discovered from
+    * the directory names as before.
     */
   def loadParquet(spark: SparkSession, path: String, alias: String): GraftFrame = {
     val (df, nanoCols) = parquetFrame(spark, Seq(path))
@@ -75,12 +77,14 @@ object Loaders {
 
   /** `spark.read.parquet(paths: _*)` without the schema-inference job:
     * the schema inference would derive comes from one footer read on the
-    * driver and is handed to the reader. Falls back to the schema-less
-    * read — so errors stay Spark's own (missing path, empty directory,
-    * corrupt footer) — when the session merges schemas, when the footer
-    * cannot be read or converted, and when a footer column shares its
-    * name with a partition column (a declared schema types such a
-    * column, inference types it from the directory names).
+    * driver, and the frame is built over the listing that picked the
+    * footer, so the paths are listed once, as by the schema-less read.
+    * Falls back to the schema-less read — so errors stay Spark's own
+    * (missing path, empty directory, corrupt footer) — when the session
+    * merges schemas, when the footer cannot be read or converted, and when
+    * a footer column shares its name with a partition column (a declared
+    * schema types such a column, inference types it from the directory
+    * names).
     */
   private[graft] def readParquet(spark: SparkSession, paths: String*): DataFrame =
     parquetFrame(spark, paths)._1
@@ -92,21 +96,18 @@ object Loaders {
       paths: Seq[String]): (DataFrame, Set[String]) = {
     import org.apache.spark.sql.execution.datasources.parquet.GraftParquetShim
     val probe =
-      try Right(GraftParquetShim.inferenceFooter(spark, paths))
+      try Right(GraftParquetShim.inferenceFooter(spark, paths)
+        .map(f => (f.footer, GraftParquetShim.declaredFrame(spark, f))))
       catch { case scala.util.control.NonFatal(e) => Left(e) }
     val footer = probe.toOption.flatten
-    val sqlConf = spark.sessionState.conf
-    val schema = footer.filterNot(f => sqlConf.isParquetSchemaMergingEnabled ||
-        f.schema.fieldNames.exists(n => f.partitionSchema.fieldNames.exists(sqlConf.resolver(n, _))))
-      .map(_.schema)
-    val df = schema.fold(spark.read)(spark.read.schema).parquet(paths: _*)
+    val df = footer.flatMap(_._2).getOrElse(spark.read.parquet(paths: _*))
     // the read succeeded where the footer read failed: a missed nano
     // column must be visible, not indistinguishable from "none" — on a
     // transient FS error the conversion silently varying between retries
     // would be nondeterministic corruption
     probe.left.foreach(e => System.err.println(
       s"[graft] WARN parquet footer read failed for ${paths.mkString(", ")}: ${e.getMessage}"))
-    (df, footer.fold(Set.empty[String])(f => nanoTsColumns(f.footer)))
+    (df, footer.fold(Set.empty[String])(f => nanoTsColumns(f._1)))
   }
 
   /** Parquet `timestamp` columns written WITHOUT `isAdjustedToUTC` arrive

@@ -35,15 +35,25 @@ object JobCounts {
 
   def describe(jobs: Seq[SparkListenerJobStart]): String =
     jobs.map(j => j.stageInfos.map(_.name).mkString("[", ", ", "]") +
-      (if (inSql(j)) " (sql)" else "")).mkString("; ")
+      (if (inSql(j)) " (sql)" else "") +
+      (if (isListing(j)) " (listing)" else "")).mkString("; ")
 
   private def inSql(j: SparkListenerJobStart): Boolean =
     j.properties.getProperty("spark.sql.execution.id") != null
 
   /** A schema-inference job: `spark.read.parquet/json` without a schema
-    * runs it while the frame is built, outside any SQL execution.
+    * runs it while the frame is built, outside any SQL execution. A
+    * distributed listing job carries the same call site, so it is told
+    * apart by its description.
     */
   def isInference(j: SparkListenerJobStart): Boolean =
-    !inSql(j) && j.stageInfos.exists(s =>
+    !inSql(j) && !isListing(j) && j.stageInfos.exists(s =>
       s.name.startsWith("parquet at ") || s.name.startsWith("json at "))
+
+  /** A file-listing job: Spark distributes a listing wider than
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` paths.
+    */
+  def isListing(j: SparkListenerJobStart): Boolean =
+    Option(j.properties.getProperty("spark.job.description"))
+      .exists(_.startsWith("Listing leaf files and directories"))
 }

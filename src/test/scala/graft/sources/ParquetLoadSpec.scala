@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.JobCounts.{describe, isInference, jobsOf}
+import graft.JobCounts.{describe, isInference, isListing, jobsOf}
 import graft.SparkSpec
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import org.apache.spark.sql.DataFrame
@@ -33,12 +33,24 @@ class ParquetLoadSpec extends SparkSpec {
     partFile(dir)
   }
 
-  /** Load `path`, compare with the schema-less read (StructType equality
-    * covers nullability and field metadata), then count the load's jobs:
-    * none, unless the load falls back to Spark's inference.
+  /** What a frame's file relation is built from: root paths, listed
+    * files, schemas, format and options.
     */
-  private def assertParity(path: String, nanoCols: Set[String] = Set.empty,
-      inferenceJobs: Int = 0): DataFrame = {
+  private def relationOf(df: DataFrame): Seq[Any] = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val r = df.queryExecution.analyzed.collectFirst {
+      case l: LogicalRelation => l.relation.asInstanceOf[HadoopFsRelation]
+    }.get
+    Seq(r.location.getClass, r.location.rootPaths, r.location.inputFiles.sorted.toSeq,
+      r.partitionSchema, r.dataSchema, r.bucketSpec, r.fileFormat.getClass, r.options)
+  }
+
+  /** Load `path` and compare with the schema-less read: StructType
+    * equality covers nullability and field metadata; the file relations
+    * and the rows must match too.
+    */
+  private def assertSameFrame(path: String, nanoCols: Set[String] = Set.empty): DataFrame = {
+    assert(relationOf(Loaders.readParquet(spark, path)) == relationOf(spark.read.parquet(path)))
     val got = Loaders.loadParquet(spark, path, "t").df
     val want = Loaders.normalizeNtzTimestamps(
       Loaders.normalizeNanoTimestamps(spark.read.parquet(path), nanoCols))
@@ -46,6 +58,15 @@ class ParquetLoadSpec extends SparkSpec {
       s"\n got ${got.schema.json}\nwant ${want.schema.json}")
     assert(got.collect().map(_.toString).sorted.toSeq ==
       want.collect().map(_.toString).sorted.toSeq)
+    got
+  }
+
+  /** [[assertSameFrame]], then count the load's jobs: none, unless the
+    * load falls back to Spark's inference.
+    */
+  private def assertParity(path: String, nanoCols: Set[String] = Set.empty,
+      inferenceJobs: Int = 0): DataFrame = {
+    val got = assertSameFrame(path, nanoCols)
     val jobs = jobsOf(spark)(Loaders.loadParquet(spark, path, "t"))
     val (loadJobs, allInference) = (jobs.size, jobs.forall(isInference))
     assert(loadJobs == inferenceJobs && allInference,
@@ -82,6 +103,43 @@ class ParquetLoadSpec extends SparkSpec {
     val got = assertParity(dir)
     assert(got.columns.toSeq == Seq("id", "p"))
     assert(got.where(col("p").isNull).count() == 1L)
+  }
+
+  test("a listing Spark distributes runs once: only the inference job goes") {
+    val sp = spark; import sp.implicits._
+    val dir = fresh("wide")
+    (1 to 4).map(i => (i.toLong, i)).toDF("id", "p").write.partitionBy("p").parquet(dir)
+    val confs = Seq("spark.sql.sources.parallelPartitionDiscovery.threshold" -> "2",
+      "spark.sql.sources.parallelPartitionDiscovery.parallelism" -> "2")
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      assertSameFrame(dir)
+      val inferred = jobsOf(spark)(spark.read.parquet(dir))
+      val declared = jobsOf(spark)(Loaders.readParquet(spark, dir))
+      val listings = inferred.count(isListing)
+      assert(listings >= 1 && inferred.size == listings + 1 &&
+        inferred.count(isInference) == 1, describe(inferred))
+      assert(declared.size == listings && declared.forall(isListing),
+        s"schema-less: ${describe(inferred)}\nfooter: ${describe(declared)}")
+    } finally confs.foreach { case (k, _) => spark.conf.unset(k) }
+  }
+
+  test("a streaming sink's output is read through its metadata log") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    val sp = spark; import sp.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val out = fresh("sink")
+    val mem = MemoryStream[(Long, String)]
+    mem.addData((1L, "a"), (2L, "b"))
+    val q = mem.toDF().writeStream.format("parquet")
+      .option("checkpointLocation", fresh("sink_checkpoint")).start(out)
+    try q.processAllAvailable() finally q.stop()
+    // a file the log never committed, first in path order: a listing
+    // would read it (and take its footer), the sink's log does not
+    Files.copy(writeOne(Seq((9L, 9, 9.0)).toDF("x", "y", "z"), fresh("sink_stray")),
+      Paths.get(out, "a-stray.parquet"))
+    val got = assertParity(out, inferenceJobs = 1)
+    assert(got.columns.toSeq == Seq("_1", "_2") && got.count() == 2L)
   }
 
   test("summary files: _common_metadata, then _metadata, define the schema") {
