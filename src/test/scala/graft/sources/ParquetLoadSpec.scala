@@ -92,6 +92,11 @@ class ParquetLoadSpec extends SparkSpec {
     Files.copy(a, dir.resolve("part-a.parquet"))
     val got = assertParity(dir.toString)
     assert(got.columns.toSeq == Seq("id", "y"))
+    // the same files as two paths, as a multi-part checkpoint read passes them
+    val files = Seq("part-b.parquet", "part-a.parquet").map(n => dir.resolve(n).toString)
+    val twoPaths = Loaders.readParquet(spark, files: _*)
+    assert(relationOf(twoPaths) == relationOf(spark.read.parquet(files: _*)))
+    assert(twoPaths.columns.toSeq == Seq("id", "y"))
   }
 
   test("Hive-partitioned directory with a __HIVE_DEFAULT_PARTITION__ value") {
