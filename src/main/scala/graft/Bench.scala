@@ -1,6 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, lit}
+import graft.sources.Loaders
+import graft.streaming.EventStreams
 
 /** Benchmark main — runs the headline query shapes (the reference's
   * criterion suite shapes, benches/benchmark.rs, re-expressed over the
@@ -74,32 +79,31 @@ object Bench {
     "q_sim_topk", "q_sim_lsh", "q_text_quality", "q_text_langid",
     "q_corpus_curate", "q_events_tumbling", "q_events_session", "q_events_dedup")
 
+  /** `ev` unioned with `n - 1` copies whose event and user ids are
+    * shifted into fresh ranges (copy `c` by `c`·10⁶ events, `c`·10⁵
+    * users): `n`× the rows per micro-batch under the same shard count.
+    */
+  def replicateEvents(ev: DataFrame, n: Int): DataFrame =
+    (0 until n).map { c =>
+      if (c == 0) ev
+      else ev.select(
+        (col("event_id") + lit(c * 1000000L)).as("event_id"), col("ts"),
+        (col("user_id") + lit(c * 100000L)).as("user_id"),
+        col("event_type"), col("value"), col("props"))
+    }.reduce(_ unionByName _)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // comma-separated query filter for local iteration; unset = full set
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
     val selected = headline.filter(n => only.forall(_.contains(n)))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // escape hatch for conf-cost A/B drills: the field-id read conf is
-      // needed only by id-mapped delta reads (none are benched), but it
-      // rides the global session like every production session builder
-      .config("spark.sql.parquet.fieldId.read.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_FIELD_ID_READ", "true"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Loaders.session()
 
     // warm the JVM/codegen on the smallest SF so measured times are steady
     val warmDir = "/root/testdata/sf0.001"
     selected.foreach { n =>
       try SparkEntry.queries(n)(spark, warmDir).foreach(_ => ())
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
     }
 
     // median-of-N at the target SF: a single run per query is
@@ -111,7 +115,7 @@ object Bench {
     val coreReps = sys.env.getOrElse("SPARK_GRAFT_BENCH_CORE_REPS", "5").toInt
     def loadavg: String =
       try scala.io.Source.fromFile("/proc/loadavg").mkString.trim.split("\\s+").take(3).mkString(" ")
-      catch { case _: Throwable => "n/a" }
+      catch { case NonFatal(_) => "n/a" }
     val loadStart = loadavg
     // contention self-defense: a bench started on a box still settling
     // from other work (the r20 driver run started at loadavg 3-5 after a
@@ -127,7 +131,7 @@ object Bench {
     def timeOnce(name: String): Double = {
       val t0 = System.nanoTime()
       try { SparkEntry.queries(name)(spark, sfDir).foreach(_ => ()); (System.nanoTime() - t0) / 1e9 }
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}"); -1.0
       }
     }
@@ -140,9 +144,17 @@ object Bench {
         else (runs.sorted.apply(runs.length / 2), runs.min)
       (name, median, min, runs)
     }
+    // min-of-N like the query drill: the single-run drill swung 2.4×
+    // on the SAME binary across same-day runs (box noise — RocksDB
+    // open, page cache, scheduling), so per-rep arrays + min are the
+    // only numbers comparable round-over-round
+    val streamReps = sys.env.get("SPARK_GRAFT_STREAM_REPS")
+      .flatMap(_.toIntOption).getOrElse(3)
+    lazy val events =
+      Loaders.loadParquet(spark, s"$sfDir/events.parquet", "events").df
     // streaming throughput: the stateful operators are graded via batch
     // twins; this times the real transformWithState+RocksDB micro-batch
-    // path. Two sizes under the SAME sizing policy (8 file-shards = 8
+    // path. Three sizes under the SAME sizing policy (8 file-shards = 8
     // micro-batches): one point measures mostly the ~0.65 s/micro-batch
     // fixed cost (RocksDB open + checkpoint + scheduling), so a single
     // size says nothing about sustained rows/s — the 10× point (users
@@ -153,39 +165,16 @@ object Bench {
     val streamStats: Seq[Seq[(Long, Long, Double)]] =
       if (only.exists(!_.contains("stream_throughput"))) Nil
       else try {
-        val ev = graft.sources.Loaders
-          .loadParquet(spark, s"$sfDir/events.parquet", "events").df
-        import org.apache.spark.sql.functions.{col, lit}
-        val ev10 = (0 until 10).map { c =>
-          if (c == 0) ev
-          else ev.select(
-            (col("event_id") + lit(c * 1000000L)).as("event_id"), col("ts"),
-            (col("user_id") + lit(c * 100000L)).as("user_id"),
-            col("event_type"), col("value"), col("props"))
-        }.reduce(_ unionByName _)
         // third size (30×): the 10× point was still rising (14k → 158k
         // rows/s) — a 3×-larger micro-batch pins where the per-row cost
         // takes over from the ~0.65 s/micro-batch fixed cost
-        val ev30 = (0 until 30).map { c =>
-          if (c == 0) ev
-          else ev.select(
-            (col("event_id") + lit(c * 1000000L)).as("event_id"), col("ts"),
-            (col("user_id") + lit(c * 100000L)).as("user_id"),
-            col("event_type"), col("value"), col("props"))
-        }.reduce(_ unionByName _)
-        // min-of-N like the query drill: the single-run drill swung 2.4×
-        // on the SAME binary across same-day runs (box noise — RocksDB
-        // open, page cache, scheduling), so per-rep arrays + min are the
-        // only numbers comparable round-over-round
-        val streamReps = sys.env.get("SPARK_GRAFT_STREAM_REPS")
-          .flatMap(_.toIntOption).getOrElse(3)
-        Seq(("1x", ev), ("10x", ev10), ("30x", ev30)).map { case (tag, frame) =>
+        Seq(1, 10, 30).map { n =>
           (0 until streamReps).map { r =>
-            graft.streaming.EventStreams.streamThroughput(
-              spark, frame, s"target/tmp/stream_bench_${tag}_r$r")
+            EventStreams.streamThroughput(spark, replicateEvents(events, n),
+              s"target/tmp/stream_bench_${n}x_r$r")
           }
         }
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         System.err.println(s"[bench] stream throughput failed: ${e.getMessage}")
         Nil
       }
@@ -200,24 +189,11 @@ object Bench {
     val streamSized: Seq[(Long, Long, Double)] =
       if (streamStats.isEmpty) Nil
       else try {
-        val ev = graft.sources.Loaders
-          .loadParquet(spark, s"$sfDir/events.parquet", "events").df
-        import org.apache.spark.sql.functions.{col, lit}
-        val ev10 = (0 until 10).map { c =>
-          if (c == 0) ev
-          else ev.select(
-            (col("event_id") + lit(c * 1000000L)).as("event_id"), col("ts"),
-            (col("user_id") + lit(c * 100000L)).as("user_id"),
-            col("event_type"), col("value"), col("props"))
-        }.reduce(_ unionByName _)
-        val streamReps = sys.env.get("SPARK_GRAFT_STREAM_REPS")
-          .flatMap(_.toIntOption).getOrElse(3)
         (0 until streamReps).map { r =>
-          graft.streaming.EventStreams.streamThroughput(
-            spark, ev10, s"target/tmp/stream_bench_sized_r$r",
-            statePartitions = 8)
+          EventStreams.streamThroughput(spark, replicateEvents(events, 10),
+            s"target/tmp/stream_bench_sized_r$r", statePartitions = 8)
         }
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         System.err.println(s"[bench] sized stream drill failed: ${e.getMessage}")
         Nil
       }
@@ -295,7 +271,9 @@ object Bench {
       try {
         if (p.getParent != null) java.nio.file.Files.createDirectories(p.getParent)
         java.nio.file.Files.write(p, (fullLine + "\n").getBytes("UTF-8"))
-      } catch { case _: Throwable => () }
+      } catch { case NonFatal(e) =>
+        System.err.println(s"[bench] could not write $p: ${e.getMessage}")
+      }
     }
     // ——— driver-contract compact line (LAST stdout line) ———
     // The driver grades the bench from a ~2,000-char tail of stdout; the

@@ -1,21 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.sources.Loaders
 
 /** Local stand-in for the driver's t1 smoke: runs SparkEntry.entry and
   * asserts rows > 0.
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.fieldId.read.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Loaders.session(cpus = 8)
     val df = SparkEntry.entry(spark)
     val rows = df.collect()
     df.show(truncate = false)

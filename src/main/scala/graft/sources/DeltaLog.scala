@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{array_join, coalesce, col, expr, input_file_name, lit, slice, split}
 import org.apache.spark.sql.types.{StructField, StructType}
+import org.apache.spark.util.SerializableConfiguration
 
 import scala.collection.mutable.ListBuffer
 
@@ -135,20 +136,12 @@ object DeltaLog {
       rels: Seq[String]): Map[String, Option[String]] =
     if (rels.size <= 32) rels.map(r => r -> statsFor(fs, tbl, r)).toMap
     else {
-      // Hadoop Configuration is not serializable (and Spark's wrapper is
-      // spark-private): ship the entry list and rebuild per partition
-      val entries: Array[(String, String)] = {
-        val buf = Array.newBuilder[(String, String)]
-        fs.getConf.iterator().forEachRemaining(e => buf += e.getKey -> e.getValue)
-        buf.result()
-      }
+      // Hadoop Configuration is not serializable; Spark's public
+      // SerializableConfiguration ships it to the executors
+      val conf = new SerializableConfiguration(fs.getConf)
       val tblStr = fs.makeQualified(tbl).toString
       spark.sparkContext.parallelize(rels, math.min(rels.size, 64))
-        .mapPartitions { it =>
-          val conf = new org.apache.hadoop.conf.Configuration(false)
-          entries.foreach { case (k, v) => conf.set(k, v) }
-          it.map(rel => rel -> DeltaStats.harvest(conf, new HPath(tblStr, rel)))
-        }
+        .map(rel => rel -> DeltaStats.harvest(conf.value, new HPath(tblStr, rel)))
         .collect().toMap
     }
 
@@ -5127,7 +5120,7 @@ object DeltaLog {
         val dataLogical = StructType(
           logical.fields.filterNot(f => partLogicalNames(f.name)))
         // spark.sql.parquet.fieldId.read.enabled is set at SESSION BUILD
-        // (Loaders.session and every main/spec builder) — a no-op for
+        // (Loaders.session, the one session builder) — a no-op for
         // schemas without field-id metadata, and setting it mid-read
         // would race concurrent queries mid-plan. Guarded here so a
         // foreign session that skipped the builder fails typed instead
@@ -5314,31 +5307,6 @@ object DeltaLog {
     sb.toString
   }
 
-  /** The DV's serialized-bitmap payload (magic + RoaringBitmapArray):
-    * inline payloads decode from z85; u/p storage seeks to the
-    * descriptor's offset inside the DV file, whose layout is
-    * [version: 1 byte = 1] then per DV
-    * [dataSize: int32 BE][data: dataSize bytes][crc32(data): int32 BE].
-    */
-  private def loadDvPayload(fs: FileSystem, tbl: HPath,
-      dv: DeltaStats.DvDescriptor): Array[Byte] = dv.storageType match {
-    case "i" =>
-      // z85 groups are 4 bytes; the payload was zero-padded up to the
-      // group boundary and sizeInBytes records the true length
-      val raw = z85Decode(dv.pathOrInlineDv)
-      if (dv.sizeInBytes > 0 && dv.sizeInBytes <= raw.length)
-        raw.take(dv.sizeInBytes)
-      else raw
-    case "u" | "p" =>
-      val file =
-        if (dv.storageType == "p") new HPath(dv.pathOrInlineDv)
-        else dvFilePath(tbl, dv.pathOrInlineDv)
-      readDvRecord(fs, file, dv.offset.getOrElse(1L), dv.sizeInBytes)
-    case other =>
-      throw graft.GraftError.InvalidOperation("load_delta",
-        s"unsupported deletion-vector storageType '$other'")
-  }
-
   /** Deleted row indexes from a DV payload: [magic: int32 LE = 1681511377]
     * then the RoaringBitmapArray portable format — [nBitmaps: int64 LE]
     * followed by that many standard 32-bit roaring bitmaps back to back
@@ -5444,8 +5412,7 @@ object DeltaLog {
     val fs = tbl.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // resolve each descriptor to (dataFileKey, binFileUri, offset, size)
     // on the driver (cheap string work); inline payloads ship their z85
-    // text in the uri slot with offset -1. Hadoop Configuration is not
-    // serializable — ship its entries and rebuild per executor partition.
+    // text in the uri slot with offset -1.
     val qualified = fs.makeQualified(tbl)
     val descriptors: Seq[(String, String, Long, Int)] = withDv.map { a =>
       val name = relKey(path, a.rel, keyDepth)
@@ -5463,23 +5430,13 @@ object DeltaLog {
             s"unsupported deletion-vector storageType '$other'")
       }
     }
-    val confEntries: Array[(String, String)] = {
-      val it = spark.sparkContext.hadoopConfiguration.iterator()
-      val b = Array.newBuilder[(String, String)]
-      while (it.hasNext) { val e = it.next(); b += e.getKey -> e.getValue }
-      b.result()
-    }
+    val conf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
     val sess = spark
     import sess.implicits._
     val deleted = spark.createDataset(descriptors)
       .repartition(math.min(descriptors.size,
         spark.sparkContext.defaultParallelism))
       .mapPartitions { it =>
-        lazy val conf = {
-          val c = new org.apache.hadoop.conf.Configuration(false)
-          confEntries.foreach { case (k, v) => c.set(k, v) }
-          c
-        }
         it.flatMap { case (name, uriOrInline, offset, size) =>
           val bytes =
             if (offset < 0L) { // inline: z85 payload, zero-padded to 4
@@ -5487,7 +5444,7 @@ object DeltaLog {
               if (size > 0 && size <= raw.length) raw.take(size) else raw
             } else {
               val p = new HPath(uriOrInline)
-              readDvRecord(p.getFileSystem(conf), p, offset, size)
+              readDvRecord(p.getFileSystem(conf.value), p, offset, size)
             }
           decodeDvPayload(bytes).map(ri => (name, ri))
         }
@@ -6041,22 +5998,12 @@ object DeltaLog {
             .putLong(ParquetFieldIdKey, lf.metadata.getLong(MappingIdKey))
             .build())
     }: _*)
-    // unlike the read-side conf (left on by documented necessity — see
-    // readDataFiles), the write has no concurrent-plan race: restore the
-    // prior value so unrelated parquet writes whose schemas happen to
-    // carry parquet.field.id metadata keep their session's behavior
-    val prevFieldIdWrite =
-      spark.conf.getOption("spark.sql.parquet.fieldId.write.enabled")
-    spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
-    try {
+    withFieldIdWriteIf(spark, enable = true) {
       val w = physDf.write.mode("overwrite")
       // directories carry PHYSICAL names (the delta colmap layout)
       (if (partitionBy.nonEmpty)
          w.partitionBy(partitionBy.map(physByLogical): _*)
        else w).parquet(path)
-    } finally prevFieldIdWrite match {
-      case Some(v) => spark.conf.set("spark.sql.parquet.fieldId.write.enabled", v)
-      case None => spark.conf.unset("spark.sql.parquet.fieldId.write.enabled")
     }
     val rels = dataFiles(fs, tbl).keys.toSeq.sorted
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -6111,10 +6058,6 @@ object DeltaLog {
           "derive the physical-to-logical mapping")))
     }
   }
-
-  private def logicalSchemaIfNameMapped(spark: SparkSession, fs: FileSystem,
-      tbl: HPath): Option[StructType] =
-    logicalSchemaIfMapped(spark, fs, tbl).collect { case ("name", s) => s }
 
   private val PhysicalNameKey = "delta.columnMapping.physicalName"
   private val MappingIdKey = "delta.columnMapping.id"
@@ -6220,17 +6163,8 @@ object DeltaLog {
   private def withFieldIdWriteIf[T](spark: SparkSession, enable: Boolean)
       (body: => T): T =
     if (!enable) body
-    else {
-      val prev =
-        spark.conf.getOption("spark.sql.parquet.fieldId.write.enabled")
-      spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
-      try body finally prev match {
-        case Some(v) =>
-          spark.conf.set("spark.sql.parquet.fieldId.write.enabled", v)
-        case None =>
-          spark.conf.unset("spark.sql.parquet.fieldId.write.enabled")
-      }
-    }
+    else Loaders.withConf(spark,
+      "spark.sql.parquet.fieldId.write.enabled" -> "true")(body)
 
   /** Logical-named read schema carrying parquet field ids: with
     * `spark.sql.parquet.fieldId.read.enabled` Spark resolves each column
@@ -6928,27 +6862,17 @@ object DeltaLog {
         import sess.implicits._
         // vacuumed-file check over the TARGET snapshot, in executors:
         // only the missing names come back
-        val confEntries: Array[(String, String)] = {
-          val it = spark.sparkContext.hadoopConfiguration.iterator()
-          val b = Array.newBuilder[(String, String)]
-          while (it.hasNext) { val e = it.next(); b += e.getKey -> e.getValue }
-          b.result()
-        }
+        val conf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
         val tblStr = path
         val missing: Array[String] = tDf.select("graft_t").as[String]
           .mapPartitions { it =>
-            lazy val conf = {
-              val c = new org.apache.hadoop.conf.Configuration(false)
-              confEntries.foreach { case (k, v) => c.set(k, v) }
-              c
-            }
             val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
             it.flatMap { s =>
               val node = try mapper.readTree(s) catch { case _: Exception => null }
               Option(node).flatMap(parseAddEntry).toSeq.flatMap { e =>
                 val base = new HPath(tblStr)
                 val f = new HPath(base, e.rel)
-                val ffs = f.getFileSystem(conf)
+                val ffs = f.getFileSystem(conf.value)
                 val dataMissing =
                   if (!ffs.exists(f)) Seq(s"file ${e.rel}") else Nil
                 val binMissing = e.dv.toSeq.flatMap { d =>

@@ -13,17 +13,22 @@ import graft.normalize.Normalize
   */
 object Loaders {
 
-  /** Session factory with the scale-oriented defaults used everywhere. */
-  def session(appName: String = "graft",
-      master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]",
-      shufflePartitions: Int = 32): SparkSession = {
+  /** `SPARK_GRAFT_CPUS`, else the JVM's available processors. */
+  private lazy val defaultCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** The one session builder: `local[cpus]` with one shuffle partition
+    * per core. Only the confs that differ from Spark's defaults are set
+    * (adaptive execution and partition coalescing are on by default).
+    */
+  def session(cpus: Int = defaultCpus): SparkSession = {
     val spark = SparkSession.builder()
-      .master(master)
-      .appName(appName)
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+      .master(s"local[$cpus]")
+      .appName("graft")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
+      // events.parquet stores TIMESTAMP(NANOS), which Spark rejects
+      // unless it reads as a long (loadParquet turns it back)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // id-mode column-mapped delta tables resolve columns BY parquet
       // field id; the conf is session-wide (Spark has no per-read form)
@@ -35,6 +40,22 @@ object Loaders {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
+  }
+
+  /** Runs `body` with the session confs `kvs` set, then puts each key
+    * back as it was — its prior value, or unset — also when `body`
+    * throws.
+    */
+  def withConf[T](spark: SparkSession, kvs: (String, String)*)(body: => T): T = {
+    val set = spark.conf.getAll
+    val prior = kvs.map { case (k, _) => k -> set.get(k) }
+    try {
+      kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+      body
+    } finally prior.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 
   /** Extension dispatch (reference src/elusion.rs:6716-6760): delta dir

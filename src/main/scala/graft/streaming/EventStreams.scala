@@ -389,30 +389,24 @@ object EventStreams {
     // setting at FIRST checkpoint fixes how many RocksDB instances every
     // micro-batch must open/commit; 32 one-core instances at local bench
     // scale is mostly fixed cost). Separately-named drill in Bench — the
-    // default-sized drill keeps its methodology. Prior conf restored.
-    // every conf set happens inside the try, so a failing start()
-    // restores them too
-    val priorShuffle = spark.conf.getOption("spark.sql.shuffle.partitions")
-    val prior = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    val priorChangelog = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled")
+    // default-sized drill keeps its methodology.
+    //
+    // changelog checkpointing (Spark 3.4+): commit uploads the batch's
+    // changelog instead of a full RocksDB snapshot — the standard
+    // production setting for exactly the per-micro-batch fixed cost this
+    // drill measures (optimization guide §1.2: fix the algorithmic cost,
+    // here per-commit I/O, before configs). State semantics identical;
+    // snapshots still happen in the background at the maintenance
+    // interval.
+    val confs = Seq(
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true"
+    ) ++ (if (statePartitions > 0)
+      Seq("spark.sql.shuffle.partitions" -> statePartitions.toString) else Nil)
     val outRows = new java.util.concurrent.atomic.AtomicLong(0L)
     val t0 = System.nanoTime()
-    try {
-      if (statePartitions > 0)
-        spark.conf.set("spark.sql.shuffle.partitions", statePartitions)
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      // changelog checkpointing (Spark 3.4+): commit uploads the batch's
-      // changelog instead of a full RocksDB snapshot — the standard
-      // production setting for exactly the per-micro-batch fixed cost this
-      // drill measures (optimization guide §1.2: fix the algorithmic cost,
-      // here per-commit I/O, before configs). State semantics identical;
-      // snapshots still happen in the background at the maintenance
-      // interval.
-      spark.conf.set(
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        "true")
+    graft.sources.Loaders.withConf(spark, confs: _*) {
       val stream = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).parquet(src)
       val q = runningUserStatsTws(stream, "user_id")(spark)
@@ -423,23 +417,6 @@ object EventStreams {
         }
         .start()
       try q.processAllAvailable() finally q.stop()
-    } finally {
-      prior match {
-        case Some(pv) =>
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass", pv)
-        case None =>
-          spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-      priorChangelog match {
-        case Some(pv) => spark.conf.set(
-          "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", pv)
-        case None => spark.conf.unset(
-          "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled")
-      }
-      if (statePartitions > 0) priorShuffle match {
-        case Some(pv) => spark.conf.set("spark.sql.shuffle.partitions", pv)
-        case None => spark.conf.unset("spark.sql.shuffle.partitions")
-      }
     }
     (inputRows, outRows.get(), (System.nanoTime() - t0) / 1e9)
   }

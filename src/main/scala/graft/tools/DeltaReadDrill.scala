@@ -1,8 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.sources.DeltaLog
+import graft.sources.{DeltaLog, Loaders}
 
 /** Measures the per-read cost of delta snapshot PLANNING at two file
   * counts — the surface the r16 declared-schema read fixed: before it,
@@ -20,13 +19,7 @@ import graft.sources.DeltaLog
 object DeltaReadDrill {
   def main(args: Array[String]): Unit = {
     val sizes = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(64, 256)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.fieldId.read.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Loaders.session(cpus = 32)
     spark.sparkContext.setLogLevel("ERROR")
 
     def minMs(reps: Int)(body: => Unit): Double =

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Full-table sf-scale generator for the sf1 correctness sweep: every
@@ -32,11 +32,7 @@ object FullScaleGen {
     val srcDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val outDir = if (args.length > 1) args(1) else "/root/repo/target/sf1full"
     val copies = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.sources.Loaders.session(cpus = 32)
     spark.sparkContext.setLogLevel("ERROR")
 
     def write(df: DataFrame, name: String, parts: Int = 32): Unit =

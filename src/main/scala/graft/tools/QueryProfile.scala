@@ -2,12 +2,13 @@ package graft.tools
 
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+import scala.util.control.NonFatal
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
+import graft.sources.Loaders
 
 /** Dev instrumentation (optimization guide §1): run selected graded
-  * queries under the EXACT Bench session configuration and report, per
+  * queries in Bench's session ([[Loaders.session]]) and report, per
   * query, the wall time plus the scheduler-level shape the Spark UI
   * would show — job/stage/task counts, total task time, the single
   * longest task, and shuffle read/write bytes. A stage whose task count
@@ -35,16 +36,7 @@ object QueryProfile {
   def main(args: Array[String]): Unit = {
     val names = if (args.nonEmpty) args.toSeq else Seq("q_knn_outliers")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.fieldId.read.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Loaders.session()
     spark.sparkContext.setLogLevel("ERROR")
 
     // marker-job handshake replaces the old fixed Thread.sleep(300): the
@@ -104,7 +96,9 @@ object QueryProfile {
     // one warm pass (codegen/JIT) at the smallest SF, mirroring Bench
     names.foreach { n =>
       try graft.SparkEntry.queries(n)(spark, "/root/testdata/sf0.001").foreach(_ => ())
-      catch { case _: Throwable => () }
+      catch { case NonFatal(e) =>
+        System.err.println(s"[profile] warm-up $n failed: ${e.getMessage}")
+      }
     }
 
     // drain warm-up events so they never land in the first query's Acc

@@ -1,5 +1,7 @@
 package graft.tools
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -146,13 +148,7 @@ object ScaleCheck {
     val timeBaseDir = if (args.length > 3) args(3) else srcDir
     val queryFilter: Option[Set[String]] =
       if (args.length > 4) Some(args(4).split(",").toSet) else None
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.fieldId.read.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.sources.Loaders.session(cpus = 32)
     spark.sparkContext.setLogLevel("ERROR")
 
     val docsOut = s"$outDir/documents.parquet"
@@ -181,7 +177,7 @@ object ScaleCheck {
     def timeQ(name: String, dir: String): Double = {
       val t0 = System.nanoTime()
       try { graft.SparkEntry.queries(name)(spark, dir).foreach(_ => ()); (System.nanoTime() - t0) / 1e9 }
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[scale] $name@$dir failed: ${e.getMessage}"); -1.0 }
     }
     // SPARK_GRAFT_SCALE_ROWS=1 also records output row counts, so a
@@ -192,7 +188,8 @@ object ScaleCheck {
     def rowsQ(name: String, dir: String): Long =
       if (!countRows) -1L
       else try graft.SparkEntry.queries(name)(spark, dir).count()
-      catch { case _: Throwable => -1L }
+      catch { case NonFatal(e) =>
+        System.err.println(s"[scale] $name@$dir count failed: ${e.getMessage}"); -1L }
     // warm code paths once at the small sf, then best-of-2 per (query, sf)
     allQ.foreach(q => timeQ(q, timeBaseDir))
     val rows = allQ.map { q =>

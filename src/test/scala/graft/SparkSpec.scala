@@ -7,15 +7,7 @@ import org.scalatest.BeforeAndAfterAll
 /** Shared local SparkSession for all specs (one per forked test JVM). */
 object TestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.fieldId.read.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = graft.sources.Loaders.session(cpus = 4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }
