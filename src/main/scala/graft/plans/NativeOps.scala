@@ -414,4 +414,204 @@ object NativeOps {
     }
     new GenericArrayData(out)
   }
+
+  // ── CSV smart-cast kernels ([[SmartCast]]) ──────────────────────────
+  // Each takes one raw CSV value and returns the typed value, or null for
+  // a null sentinel and for a value the column's cast rejects. The rules
+  // are the reference's CASE WHEN/CAST chain per class (see
+  // graft.sources.CsvSmartCaster.castExpr), run over the value's bytes
+  // with no regex and, but for the rare cases `smartDouble` names, no
+  // intermediate string.
+
+  private val nullSentinels: Array[Array[Byte]] =
+    graft.sources.CsvSmartCaster.NullSentinels.toArray
+      .map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+
+  /** First byte of `s` after leading spaces (Spark's `trim` strips spaces
+    * only).
+    */
+  private def spaceTrimStart(s: UTF8String): Int = {
+    var a = 0
+    while (a < s.numBytes && s.getByte(a) == ' ') a += 1
+    a
+  }
+
+  /** End (exclusive) of `s` before trailing spaces, not below `from`. */
+  private def spaceTrimEnd(s: UTF8String, from: Int): Int = {
+    var b = s.numBytes
+    while (b > from && s.getByte(b - 1) == ' ') b -= 1
+    b
+  }
+
+  /** Whether bytes [from, to) of `s` equal `word`, ASCII letters folded to
+    * lower case when `fold`.
+    */
+  private def bytesEqual(s: UTF8String, from: Int, to: Int, word: Array[Byte],
+      fold: Boolean): Boolean = word.length == to - from && {
+    var i = 0
+    while (i < word.length &&
+        (if (fold) (s.getByte(from + i) | 0x20) else s.getByte(from + i).toInt) == word(i)) i += 1
+    i == word.length
+  }
+
+  /** Whether `s`, space-trimmed as by Spark's `trim`, is a null sentinel. */
+  def isNullSentinel(s: UTF8String): Boolean = {
+    val a = spaceTrimStart(s)
+    val b = spaceTrimEnd(s, a)
+    var k = 0
+    while (k < nullSentinels.length && !bytesEqual(s, a, b, nullSentinels(k), fold = false)) k += 1
+    k < nullSentinels.length
+  }
+
+  /** Integer class: `try_cast(trim(v) AS BIGINT)`. Spark's exact rule
+    * (`UTF8String.toLongExact`, which trims whitespace and control bytes
+    * itself) is its decimal-tolerant `toLong` minus the decimal point, so
+    * a value holding a `.` is rejected first.
+    */
+  def smartLong(s: UTF8String): java.lang.Long =
+    if (isNullSentinel(s)) null
+    else {
+      var i = 0
+      while (i < s.numBytes && s.getByte(i) != '.') i += 1
+      val w = new UTF8String.LongWrapper
+      if (i == s.numBytes && s.toLong(w)) java.lang.Long.valueOf(w.value) else null
+    }
+
+  private val trueSpellings: Array[Array[Byte]] = Array("true", "yes", "da").map(_.getBytes)
+
+  /** Boolean class: true for `true`/`yes`/`da` in any ASCII case after the
+    * space trim, false otherwise. (No non-ASCII character lower-cases to
+    * a letter of these words, so ASCII folding equals Spark's `lower`.)
+    */
+  def smartBoolean(s: UTF8String): java.lang.Boolean =
+    if (isNullSentinel(s)) null
+    else {
+      val a = spaceTrimStart(s)
+      val b = spaceTrimEnd(s, a)
+      var k = 0
+      while (k < trueSpellings.length && !bytesEqual(s, a, b, trueSpellings(k), fold = true)) k += 1
+      java.lang.Boolean.valueOf(k < trueSpellings.length)
+    }
+
+  /** Date and String classes: the value itself, null for a sentinel. */
+  def smartString(s: UTF8String): UTF8String = if (isNullSentinel(s)) null else s
+
+  /** Characters the Float class drops anywhere in a value: currency
+    * symbols and the regex class `\s`.
+    */
+  private def floatDropped(c: Char): Boolean = c match {
+    case '$' | '€' | '£' | '¥' | '₹' | ' ' | '\t' | '\n' | '\u000b' | '\f' | '\r' => true
+    case _ => false
+  }
+
+  private val exactPow10: Array[Double] = Array.iterate(1.0, 23)(_ * 10)
+
+  /** Float class: drop currency symbols and whitespace, note and drop a
+    * trailing `%`, apply the EU/US separator rule (see [[isEuNumber]]),
+    * `try_cast(… AS DOUBLE)`, and divide a percent by 100.
+    *
+    * Values of ASCII and the four multi-byte currency symbols are read
+    * straight from the bytes; any other non-ASCII value is decoded as
+    * Spark's string functions decode it. A plain decimal of at most 15
+    * digits and 22 fraction digits is exact as `digits / 10^fraction`
+    * (both operands are exact doubles, so the one division rounds
+    * correctly, as `Double.parseDouble` does); anything else goes through
+    * the cast's own parse.
+    */
+  def smartDouble(s: UTF8String): java.lang.Double = {
+    if (isNullSentinel(s)) return null
+    val n = s.numBytes
+    var buf = new Array[Char](n)
+    var len = 0
+    var i = 0
+    while (i < n && buf != null) {
+      val b = s.getByte(i)
+      val b1 = if (i + 1 < n) s.getByte(i + 1) & 0xff else -1
+      val b2 = if (i + 2 < n) s.getByte(i + 2) & 0xff else -1
+      if (b >= 0) {
+        if (!floatDropped(b.toChar)) { buf(len) = b.toChar; len += 1 }
+        i += 1
+      } else if ((b & 0xff) == 0xc2 && (b1 == 0xa3 || b1 == 0xa5)) i += 2 // £ ¥
+      else if ((b & 0xff) == 0xe2 && b1 == 0x82 && (b2 == 0xac || b2 == 0xb9)) i += 3 // € ₹
+      else buf = null
+    }
+    if (buf == null) { // other non-ASCII: decode as Spark's string functions do
+      val str = s.toString
+      buf = new Array[Char](str.length)
+      len = 0
+      i = 0
+      while (i < str.length) {
+        if (!floatDropped(str.charAt(i))) { buf(len) = str.charAt(i); len += 1 }
+        i += 1
+      }
+    }
+    val pct = len > 0 && buf(len - 1) == '%'
+    val body = if (pct) len - 1 else len
+    val eu = isEuNumber(buf, body)
+    var m = 0
+    i = 0
+    while (i < body) {
+      val c = buf(i)
+      if (eu && c != '.') { buf(m) = if (c == ',') '.' else c; m += 1 }
+      else if (!eu && c != ',') { buf(m) = c; m += 1 }
+      i += 1
+    }
+    val v = parseDouble(buf, m)
+    if (v == null || !pct) v else java.lang.Double.valueOf(v / 100.0)
+  }
+
+  /** The EU shape `^[+-]?(\d{1,3}(\.\d{3})+(,\d+)|\d+,\d+)$`: dots as
+    * thousands separators and a REQUIRED decimal comma, or a bare decimal
+    * comma. ('0.123' and '12.345' are plain decimals.)
+    */
+  private def isEuNumber(c: Array[Char], len: Int): Boolean = {
+    def digits(from: Int, to: Int): Boolean =
+      from < to && (from until to).forall(k => c(k) >= '0' && c(k) <= '9')
+    val start = if (len > 0 && (c(0) == '+' || c(0) == '-')) 1 else 0
+    val comma = (start until len).find(c(_) == ',').getOrElse(-1)
+    if (comma < 0 || !digits(comma + 1, len)) false
+    else if (digits(start, comma)) true
+    else {
+      val dot = (start until comma).find(c(_) == '.').getOrElse(-1)
+      dot - start >= 1 && dot - start <= 3 && digits(start, dot) &&
+        (comma - dot) % 4 == 0 &&
+        (dot until comma by 4).forall(g => c(g) == '.' && digits(g + 1, g + 4))
+    }
+  }
+
+  /** `try_cast(c[0, len) AS DOUBLE)`: Spark's string → double cast is
+    * `Double.parseDouble`, then its special literals (`inf`, `nan`, …).
+    */
+  private def parseDouble(c: Array[Char], len: Int): java.lang.Double = {
+    val neg = len > 0 && c(0) == '-'
+    var i = if (len > 0 && (c(0) == '+' || neg)) 1 else 0
+    var mant = 0L
+    var digits = 0
+    var frac = -1
+    var plain = true
+    while (i < len && plain) {
+      val ch = c(i)
+      if (ch >= '0' && ch <= '9') {
+        if (digits < 18) mant = mant * 10 + (ch - '0')
+        digits += 1
+        if (frac >= 0) frac += 1
+      } else if (ch == '.' && frac < 0) frac = 0
+      else plain = false
+      i += 1
+    }
+    if (plain && digits == 0) null // '', '+', '.', '-.'
+    else if (plain && digits <= 15 && frac <= 22) {
+      val v = mant.toDouble / exactPow10(math.max(frac, 0))
+      java.lang.Double.valueOf(if (neg) -v else v)
+    } else if (!plain && (0 until len).forall(k => "0123456789+-.%".indexOf(c(k)) >= 0))
+      null // sign, digits and points out of the decimal grammar
+    else {
+      val str = new String(c, 0, len)
+      try java.lang.Double.valueOf(java.lang.Double.parseDouble(str))
+      catch { case _: NumberFormatException =>
+        org.apache.spark.sql.catalyst.expressions.Cast
+          .processFloatingPointSpecialLiterals(str, false).asInstanceOf[java.lang.Double]
+      }
+    }
+  }
 }

@@ -1,22 +1,29 @@
 package graft.sources
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.csv.GraftCsvShim
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.GraftSqlShim
 import org.apache.spark.sql.types._
+import graft.plans.SmartCast
 
 /** The reference's flagship CSV loader re-expressed Spark-side
   * (reference: src/features/csv.rs — delimiter detection 41-90, sampling
   * 168-205, value classification 319-447, majority vote 340-391, cast
   * projection 755-823; SURVEY §1.2).
   *
-  * Pipeline: detect delimiter on 10 head lines → read ALL columns as
-  * string → sample 100 rows (driver-side limit().collect(), the only
-  * driver touch, bounded at 100 rows regardless of file size — the
-  * reference collects the whole file to sample, an anti-optimization
-  * SURVEY §4.1 flags) → per-column majority vote (>80 % over ≤50 non-null
-  * samples) into {Integer, Float, Boolean, Date, String} → one generated
-  * CASE WHEN rlike THEN CAST projection per column (codegen-friendly
-  * Column expressions, no UDFs).
+  * Pipeline: detect the delimiter on the first 10 lines → read every
+  * column as a string → sample the first 100 rows → per-column majority
+  * vote (>80 % over ≤50 non-null samples) into {Integer, Float, Boolean,
+  * Date, String} → one [[graft.plans.SmartCast]] per column, a codegen'd
+  * kernel that casts each value in one pass (no regex, no UDF). The head
+  * lines and sample rows are read on the driver by
+  * `GraftCsvShim.CsvHead`, in the scan's order and no further than the
+  * sample needs, so building the frame starts no Spark job; the reference
+  * collects the whole file to sample, an anti-optimization SURVEY §4.1
+  * flags.
   */
 object CsvSmartCaster {
 
@@ -95,59 +102,43 @@ object CsvSmartCaster {
     if (best._2 > 0) best._1 else ","
   }
 
-  private def nullGuard(c: Column): Column =
-    c.isNull || trim(c).isin(NullSentinels.toSeq: _*)
-
-  /** The generated smart-cast expression per column class
-    * (create_casting_expression, csv.rs:755-823). Integer→BIGINT,
-    * Float→DOUBLE (currency stripped, % → /100, EU separators fixed),
-    * Boolean→BOOLEAN (da/yes→true), Date stays STRING (csv.rs:818-821).
+  /** The smart-cast expression per column class
+    * (create_casting_expression, csv.rs:755-823): Integer→BIGINT,
+    * Float→DOUBLE (currency and whitespace stripped, % → /100, EU
+    * separators fixed), Boolean→BOOLEAN (true/yes/da → true), Date stays
+    * STRING (csv.rs:818-821). Null sentinels, and values the class's cast
+    * rejects, become NULL, as the reference's CASE WHEN regex THEN CAST
+    * does. See [[graft.plans.NativeOps.smartDouble]] for the exact rules.
     */
   def castExpr(c: Column, cls: VClass): Column = cls match {
-    case VInteger =>
-      when(nullGuard(c), lit(null).cast(LongType))
-        .otherwise(trim(c).cast(LongType))
-    case VFloat =>
-      val t = trim(regexp_replace(trim(c), """[$€£¥₹\s]""", ""))
-      val isPct = t.endsWith(lit("%"))
-      val noPct = regexp_replace(t, "%$", "")
-      // EU style: dots as thousands, comma as decimal mark. The decimal
-      // comma is REQUIRED (matches the classifier above and csv.rs branch
-      // order): '0.123' / '12.345' are plain decimals, NOT EU thousands —
-      // an optional comma here silently inflated them 1000×.
-      val isEu = noPct.rlike("""^[+-]?(\d{1,3}(\.\d{3})+(,\d+)|\d+,\d+)$""")
-      val normalized = when(isEu,
-        regexp_replace(regexp_replace(noPct, """\.""", ""), ",", "."))
-        .otherwise(regexp_replace(noPct, ",", ""))
-      val asNum = normalized.cast(DoubleType)
-      when(nullGuard(c), lit(null).cast(DoubleType))
-        .otherwise(when(isPct, asNum / 100.0).otherwise(asNum))
-    case VBoolean =>
-      when(nullGuard(c), lit(null).cast(BooleanType))
-        .otherwise(lower(trim(c)).isin("true", "yes", "da"))
-    case VDate | VString =>
-      when(nullGuard(c), lit(null).cast(StringType)).otherwise(c)
     case VNull => lit(null).cast(StringType)
+    case _ => GraftSqlShim.column(SmartCast(GraftSqlShim.expression(c), cls))
   }
+
+  private val SampleRows = 100
 
   /** Full smart load (csv.rs:41-317 composed). */
   def load(spark: SparkSession, path: String): DataFrame = {
-    val headLines = spark.read.textFile(path).limit(10).collect().toSeq
-    val delim = detectDelimiter(headLines)
-    val raw = spark.read
-      .option("header", "true")
-      .option("inferSchema", "false")
-      .option("sep", delim)
-      .option("quote", "\"")
-      .option("escape", "\"")
-      .csv(path)
+    def options(delim: String) = Map("header" -> "true", "inferSchema" -> "false",
+      "sep" -> delim, "quote" -> "\"", "escape" -> "\"")
+    val probed =
+      try GraftCsvShim.head(spark, path).flatMap(h =>
+        h.frame(options(detectDelimiter(h.lines(10))), SampleRows))
+      catch { case NonFatal(e) =>
+        System.err.println(s"[graft] WARN csv head probe failed for $path: ${e.getMessage}")
+        None
+      }
+    // a missing path, a glob, a streaming sink's output, partition
+    // directories, no header line: Spark's own jobs read the head
+    val (raw, sample) = probed.getOrElse {
+      val headLines = spark.read.textFile(path).limit(10).collect().toSeq
+      val df = spark.read.options(options(detectDelimiter(headLines))).csv(path)
+      (df, df.limit(SampleRows).collect().toSeq.map(r => (0 until r.length).map(r.getString)))
+    }
     val normNames = graft.normalize.Normalize.sanitizeHeaders(raw.columns.toSeq)
-    val named = raw.toDF(normNames: _*)
-    val sample = named.limit(100).collect()
-    val classes = normNames.zipWithIndex.map { case (n, i) =>
-      val values = sample.toSeq.flatMap(r => Option(r.getString(i)))
-      n -> vote(values)
-    }.toMap
-    named.select(normNames.map(n => castExpr(col(n), classes(n)).as(n)): _*)
+    val classes = normNames.indices.map(i => vote(sample.flatMap(r => Option(r(i)))))
+    raw.toDF(normNames: _*).select(normNames.zip(classes).map { case (n, cls) =>
+      castExpr(col(n), cls).as(n)
+    }: _*)
   }
 }

@@ -313,7 +313,8 @@ object Loaders {
 
   /** CSV with the reference's smart-cast inference (SURVEY §1.2;
     * src/features/csv.rs): delimiter auto-detect, all-string read, 100-row
-    * sample majority vote, CASE/CAST projection. See [[CsvSmartCaster]].
+    * sample majority vote, one native cast per column. See
+    * [[CsvSmartCaster]].
     */
   def loadCsv(spark: SparkSession, path: String, alias: String): GraftFrame =
     GraftFrame(CsvSmartCaster.load(spark, path), alias)

@@ -47,30 +47,43 @@ object GraftParquetShim {
     * not a listing); listing, footer and conversion errors propagate.
     */
   def inferenceFooter(spark: SparkSession,
-      paths: Seq[String]): Option[InferenceFooter] = {
+      paths: Seq[String]): Option[InferenceFooter] = readListing(spark, paths).flatMap {
+    case (index, options) =>
+      val conf = spark.sessionState.newHadoopConf()
+      val leaves = index.allFiles().sortBy(_.getPath.toString)
+      def named(name: String): Option[FileStatus] = leaves.find(_.getPath.getName == name)
+      named(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE)
+        .orElse(named(ParquetFileWriter.PARQUET_METADATA_FILE))
+        .orElse(leaves.find { f =>
+          val n = f.getPath.getName
+          n != ParquetFileWriter.PARQUET_COMMON_METADATA_FILE &&
+            n != ParquetFileWriter.PARQUET_METADATA_FILE
+        })
+        .map { f =>
+          val footer = ParquetFooterReader.readFooter(
+            HadoopInputFile.fromStatus(f, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
+          InferenceFooter(index, options, footer, footerSchema(spark, footer))
+        }
+  }
+
+  /** The listing a file-source read of `paths` builds, with the `path`
+    * option the reader adds for a single path: an `InMemoryFileIndex`
+    * over the qualified paths, through the session's file-status cache.
+    * None when a path is a glob, or the path is a streaming sink's output
+    * (the read then uses the sink's metadata log, not a listing).
+    */
+  def readListing(spark: SparkSession,
+      paths: Seq[String]): Option[(InMemoryFileIndex, Map[String, String])] = {
     val conf = spark.sessionState.newHadoopConf()
     val roots = paths.map(new Path(_))
     if (roots.exists(SparkHadoopUtil.get.isGlobPath) ||
-        FileStreamSink.hasMetadata(paths, conf, spark.sessionState.conf)) return None
-    // the reader turns a single path into the `path` option
-    val options = if (paths.size == 1) Map("path" -> paths.head) else Map.empty[String, String]
-    val index = new InMemoryFileIndex(spark,
-      roots.map(p => p.getFileSystem(conf).makeQualified(p)), options, None,
-      FileStatusCache.getOrCreate(spark))
-    val leaves = index.allFiles().sortBy(_.getPath.toString)
-    def named(name: String): Option[FileStatus] = leaves.find(_.getPath.getName == name)
-    named(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE)
-      .orElse(named(ParquetFileWriter.PARQUET_METADATA_FILE))
-      .orElse(leaves.find { f =>
-        val n = f.getPath.getName
-        n != ParquetFileWriter.PARQUET_COMMON_METADATA_FILE &&
-          n != ParquetFileWriter.PARQUET_METADATA_FILE
-      })
-      .map { f =>
-        val footer = ParquetFooterReader.readFooter(
-          HadoopInputFile.fromStatus(f, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
-        InferenceFooter(index, options, footer, footerSchema(spark, footer))
-      }
+        FileStreamSink.hasMetadata(paths, conf, spark.sessionState.conf)) None
+    else {
+      val options = if (paths.size == 1) Map("path" -> paths.head) else Map.empty[String, String]
+      Some((new InMemoryFileIndex(spark,
+        roots.map(p => p.getFileSystem(conf).makeQualified(p)), options, None,
+        FileStatusCache.getOrCreate(spark)), options))
+    }
   }
 
   /** The frame `spark.read.schema(f.schema).parquet(paths)` builds — the
