@@ -504,46 +504,19 @@ object NativeOps {
     case _ => false
   }
 
-  private val exactPow10: Array[Double] = Array.iterate(1.0, 23)(_ * 10)
-
   /** Float class: drop currency symbols and whitespace, note and drop a
     * trailing `%`, apply the EU/US separator rule (see [[isEuNumber]]),
     * `try_cast(… AS DOUBLE)`, and divide a percent by 100.
-    *
-    * Values of ASCII and the four multi-byte currency symbols are read
-    * straight from the bytes; any other non-ASCII value is decoded as
-    * Spark's string functions decode it. A plain decimal of at most 15
-    * digits and 22 fraction digits is exact as `digits / 10^fraction`
-    * (both operands are exact doubles, so the one division rounds
-    * correctly, as `Double.parseDouble` does); anything else goes through
-    * the cast's own parse.
     */
   def smartDouble(s: UTF8String): java.lang.Double = {
     if (isNullSentinel(s)) return null
-    val n = s.numBytes
-    var buf = new Array[Char](n)
+    val str = s.toString
+    val buf = new Array[Char](str.length)
     var len = 0
     var i = 0
-    while (i < n && buf != null) {
-      val b = s.getByte(i)
-      val b1 = if (i + 1 < n) s.getByte(i + 1) & 0xff else -1
-      val b2 = if (i + 2 < n) s.getByte(i + 2) & 0xff else -1
-      if (b >= 0) {
-        if (!floatDropped(b.toChar)) { buf(len) = b.toChar; len += 1 }
-        i += 1
-      } else if ((b & 0xff) == 0xc2 && (b1 == 0xa3 || b1 == 0xa5)) i += 2 // £ ¥
-      else if ((b & 0xff) == 0xe2 && b1 == 0x82 && (b2 == 0xac || b2 == 0xb9)) i += 3 // € ₹
-      else buf = null
-    }
-    if (buf == null) { // other non-ASCII: decode as Spark's string functions do
-      val str = s.toString
-      buf = new Array[Char](str.length)
-      len = 0
-      i = 0
-      while (i < str.length) {
-        if (!floatDropped(str.charAt(i))) { buf(len) = str.charAt(i); len += 1 }
-        i += 1
-      }
+    while (i < str.length) {
+      if (!floatDropped(str.charAt(i))) { buf(len) = str.charAt(i); len += 1 }
+      i += 1
     }
     val pct = len > 0 && buf(len - 1) == '%'
     val body = if (pct) len - 1 else len
@@ -556,7 +529,7 @@ object NativeOps {
       else if (!eu && c != ',') { buf(m) = c; m += 1 }
       i += 1
     }
-    val v = parseDouble(buf, m)
+    val v = parseDouble(new String(buf, 0, m))
     if (v == null || !pct) v else java.lang.Double.valueOf(v / 100.0)
   }
 
@@ -579,39 +552,13 @@ object NativeOps {
     }
   }
 
-  /** `try_cast(c[0, len) AS DOUBLE)`: Spark's string → double cast is
+  /** `try_cast(str AS DOUBLE)`: Spark's string → double cast is
     * `Double.parseDouble`, then its special literals (`inf`, `nan`, …).
     */
-  private def parseDouble(c: Array[Char], len: Int): java.lang.Double = {
-    val neg = len > 0 && c(0) == '-'
-    var i = if (len > 0 && (c(0) == '+' || neg)) 1 else 0
-    var mant = 0L
-    var digits = 0
-    var frac = -1
-    var plain = true
-    while (i < len && plain) {
-      val ch = c(i)
-      if (ch >= '0' && ch <= '9') {
-        if (digits < 18) mant = mant * 10 + (ch - '0')
-        digits += 1
-        if (frac >= 0) frac += 1
-      } else if (ch == '.' && frac < 0) frac = 0
-      else plain = false
-      i += 1
+  private def parseDouble(str: String): java.lang.Double =
+    try java.lang.Double.valueOf(java.lang.Double.parseDouble(str))
+    catch { case _: NumberFormatException =>
+      org.apache.spark.sql.catalyst.expressions.Cast
+        .processFloatingPointSpecialLiterals(str, false).asInstanceOf[java.lang.Double]
     }
-    if (plain && digits == 0) null // '', '+', '.', '-.'
-    else if (plain && digits <= 15 && frac <= 22) {
-      val v = mant.toDouble / exactPow10(math.max(frac, 0))
-      java.lang.Double.valueOf(if (neg) -v else v)
-    } else if (!plain && (0 until len).forall(k => "0123456789+-.%".indexOf(c(k)) >= 0))
-      null // sign, digits and points out of the decimal grammar
-    else {
-      val str = new String(c, 0, len)
-      try java.lang.Double.valueOf(java.lang.Double.parseDouble(str))
-      catch { case _: NumberFormatException =>
-        org.apache.spark.sql.catalyst.expressions.Cast
-          .processFloatingPointSpecialLiterals(str, false).asInstanceOf[java.lang.Double]
-      }
-    }
-  }
 }
