@@ -16,6 +16,13 @@ import graft.streaming.EventStreams
   */
 object SparkEntry {
 
+  /** Scratch directory of the queries that write and re-read files
+    * (`target/tmp` under the JVM's working directory): each checkout
+    * runs against its own files. The DuckDB oracles read the same paths.
+    */
+  private val ScratchRoot: String =
+    java.nio.file.Paths.get("target", "tmp").toAbsolutePath.toString
+
   private def t(s: SparkSession, dir: String, n: String): GraftFrame =
     Loaders.loadParquet(s, s"$dir/$n.parquet", n)
 
@@ -32,7 +39,7 @@ object SparkEntry {
     */
   private val builtIndexes = new java.util.concurrent.ConcurrentHashMap[String, Unit]()
   private def gradedIndexPath(base: String, sfDir: String): String =
-    "/root/repo/target/tmp/" + base + "_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_")
+    s"$ScratchRoot/" + base + "_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_")
   private def ensureIndexBuilt(path: String)(build: => Unit): Unit =
     builtIndexes.computeIfAbsent(path, _ => build)
 
@@ -610,7 +617,7 @@ object SparkEntry {
 
     // JSON loader semantics (numbers stay numeric, strings stay strings)
     "q_json_load" -> ((s, d) => {
-      val path = "/root/repo/target/tmp/documents_rt.json"
+      val path = s"$ScratchRoot/documents_rt.json"
       Writers.writeJsonSingle(t(s, d, "documents").toDF, path)
       Loaders.loadJson(s, path, "docs_json")
         .select("lang")
@@ -620,7 +627,7 @@ object SparkEntry {
 
     // folder loader: two shards UNION ALL'd back to the full table
     "q_folder_load" -> ((s, d) => {
-      val dir = "/root/repo/target/tmp/folder_rt"
+      val dir = s"$ScratchRoot/folder_rt"
       val c = t(s, d, "customer").toDF
       Writers.writeCsvSingle(c.where(col("c_custkey") % 2 === 0), "overwrite", s"$dir/even.csv")
       Writers.writeCsvSingle(c.where(col("c_custkey") % 2 === 1), "overwrite", s"$dir/odd.csv")
@@ -633,7 +640,7 @@ object SparkEntry {
     // the at-scale XML shape: many files, parsed on the executors
     // (wholeTextFiles), schema fixed from the first file
     "q_xml_folder" -> ((s, d) => {
-      val dir = java.nio.file.Paths.get("/root/repo/target/tmp/xml_folder_rt")
+      val dir = java.nio.file.Paths.get(s"$ScratchRoot/xml_folder_rt")
       java.nio.file.Files.createDirectories(dir)
       val rows = t(s, d, "customer").toDF
         .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal")).collect()
@@ -655,7 +662,7 @@ object SparkEntry {
 
     // user-declared schema load (reference with_schema.rs)
     "q_with_schema" -> ((s, d) => {
-      val path = "/root/repo/target/tmp/customer_schema.csv"
+      val path = s"$ScratchRoot/customer_schema.csv"
       Writers.writeCsvSingle(t(s, d, "customer").toDF, "overwrite", path)
       Loaders.loadWithSchema(s, path, "customer_ws", Seq(
         "c_custkey" -> "int64", "c_name" -> "string", "c_nationkey" -> "int32",
@@ -668,7 +675,7 @@ object SparkEntry {
     // real delta-protocol roundtrip: overwrite + append commits through
     // DeltaLog, read back through load()'s _delta_log dispatch branch
     "q_delta_roundtrip" -> ((s, d) => {
-      val path = "/root/repo/target/tmp/customer_delta"
+      val path = s"$ScratchRoot/customer_delta"
       val c = t(s, d, "customer").toDF
       Writers.writeDeltaTable(c, "overwrite", path, partitionBy = Seq("c_mktsegment"))
       Writers.writeDeltaTable(c.where(col("c_custkey") % 10 === 0), "append", path,
@@ -688,7 +695,7 @@ object SparkEntry {
     // live constraints); the violation/abort paths are pinned by
     // DeltaConstraintsSpec.
     "q_delta_constraints" -> ((s, d) => {
-      val path = "/root/repo/target/tmp/orders_delta_constrained"
+      val path = s"$ScratchRoot/orders_delta_constrained"
       val o = t(s, d, "orders").toDF
       Writers.writeDeltaTable(o, "overwrite", path,
         tableProperties = Map(
@@ -715,7 +722,7 @@ object SparkEntry {
     // appends. The oracle recomputes every change row straight from the
     // orders table.
     "q_delta_cdf" -> ((s, d) => {
-      val path = "/root/repo/target/tmp/orders_delta_cdf"
+      val path = s"$ScratchRoot/orders_delta_cdf"
       val o = t(s, d, "orders").toDF
       // wipe-reset: the version window below (0..3) needs the log
       // anchored at THIS run's commits (overwrite is version-preserving,
@@ -748,7 +755,7 @@ object SparkEntry {
     // — resolved via the same monotonized-mtime rule as timestamp time
     // travel. The oracle recomputes the change rows from orders.
     "q_delta_cdf_ts" -> ((s, d) => {
-      val path = "/root/repo/target/tmp/orders_delta_cdf_ts"
+      val path = s"$ScratchRoot/orders_delta_cdf_ts"
       val o = t(s, d, "orders").toDF
       val hp = new org.apache.hadoop.fs.Path(path)
       val hfs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -790,7 +797,7 @@ object SparkEntry {
     // adds as inserts, no cdc actions owed, exactly delta-spark's
     // overwrite feed — and (now) the current snapshot.
     "q_delta_overwrite_history" -> ((s, d) => {
-      val path = "/root/repo/target/tmp/customer_delta_ovr"
+      val path = s"$ScratchRoot/customer_delta_ovr"
       val pp = java.nio.file.Paths.get(path)
       if (java.nio.file.Files.exists(pp)) {
         java.nio.file.Files.walk(pp).sorted(java.util.Comparator.reverseOrder())
@@ -823,7 +830,7 @@ object SparkEntry {
     // on a name-mapped table. Oracle recomputes every change row from
     // orders.
     "q_delta_cdf_mapped" -> ((s, d) => {
-      val path = "/root/repo/target/tmp/orders_delta_cdf_mapped"
+      val path = s"$ScratchRoot/orders_delta_cdf_mapped"
       val o = t(s, d, "orders").toDF
       val hp = new org.apache.hadoop.fs.Path(path)
       val hfs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -855,7 +862,7 @@ object SparkEntry {
     // pre-widening narrow-physical files upcast at scan. The oracle
     // recomputes the union straight from orders at the WIDE types.
     "q_delta_widen" -> ((s, d) => {
-      val path = "/root/repo/target/tmp/orders_delta_widen"
+      val path = s"$ScratchRoot/orders_delta_widen"
       val pp = java.nio.file.Paths.get(path)
       if (java.nio.file.Files.exists(pp)) {
         java.nio.file.Files.walk(pp).sorted(java.util.Comparator.reverseOrder())
@@ -891,7 +898,7 @@ object SparkEntry {
     // variant_get. The oracle recomputes the aggregate straight from
     // the documents table — the variant layer must be value-lossless.
     "q_delta_variant" -> ((s, d) => {
-      val path = "/root/repo/target/tmp/docs_delta_variant"
+      val path = s"$ScratchRoot/docs_delta_variant"
       val pp = java.nio.file.Paths.get(path)
       if (java.nio.file.Files.exists(pp)) {
         java.nio.file.Files.walk(pp).sorted(java.util.Comparator.reverseOrder())
@@ -921,7 +928,7 @@ object SparkEntry {
     // wrong snapshot — only ICT resolution matches the oracle, which
     // recomputes the version-1 snapshot straight from orders.
     "q_delta_ict_travel" -> ((s, d) => {
-      val path = "/root/repo/target/tmp/orders_delta_ict"
+      val path = s"$ScratchRoot/orders_delta_ict"
       val pp = java.nio.file.Paths.get(path)
       if (java.nio.file.Files.exists(pp)) {
         java.nio.file.Files.walk(pp).sorted(java.util.Comparator.reverseOrder())
@@ -960,7 +967,7 @@ object SparkEntry {
     // OMIT it, so the writer computes it from the expression — the
     // wrong-supplied-value rejection is pinned by DeltaWriterGateSpec.
     "q_delta_generated" -> ((s, d) => {
-      val path = "/root/repo/target/tmp/orders_delta_generated"
+      val path = s"$ScratchRoot/orders_delta_generated"
       val o = t(s, d, "orders").toDF
       val genMeta = new org.apache.spark.sql.types.MetadataBuilder()
         .putString("delta.generationExpression", "o_orderkey * 2").build()
@@ -987,7 +994,7 @@ object SparkEntry {
     // stepping past the recorded high-water mark and refreshes the mark
     // via a metaData action. The oracle recomputes the whole sequence.
     "q_delta_identity" -> ((s, d) => {
-      val path = "/root/repo/target/tmp/orders_delta_identity"
+      val path = s"$ScratchRoot/orders_delta_identity"
       val o = t(s, d, "orders").toDF
       val hp = new org.apache.hadoop.fs.Path(path)
       val hfs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -1023,7 +1030,7 @@ object SparkEntry {
     // unique through append + upsert + DV delete, and the oracle
     // recomputes every group from orders.
     "q_delta_rowtracking" -> ((s, d) => {
-      val path = "/root/repo/target/tmp/orders_delta_rowtrack"
+      val path = s"$ScratchRoot/orders_delta_rowtrack"
       val o = t(s, d, "orders").toDF
       val hp = new org.apache.hadoop.fs.Path(path)
       val hfs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -1062,7 +1069,7 @@ object SparkEntry {
     // exercises this engine's v2 WRITE as well as its read. The oracle
     // recomputes from customer.
     "q_delta_v2_checkpoint" -> ((s, d) => {
-      val path = "/root/repo/target/tmp/customer_delta_v2cp"
+      val path = s"$ScratchRoot/customer_delta_v2cp"
       val c = t(s, d, "customer").toDF
       val hp = new org.apache.hadoop.fs.Path(path)
       val hfs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -1149,7 +1156,7 @@ object SparkEntry {
     // read, src/elusion.rs:6607-6710, would return the scrambled
     // physical names)
     "q_delta_colmap" -> ((s, d) => {
-      val path = "/root/repo/target/tmp/customer_delta_colmap"
+      val path = s"$ScratchRoot/customer_delta_colmap"
       val c = t(s, d, "customer").toDF
       // v0: the mapped fixture (even keys); v1: APPEND through the
       // logical→physical rename path — the read must see the full table
@@ -1195,7 +1202,7 @@ object SparkEntry {
     // mutating through the mapping — the oracle recomputes the final row
     // set straight from customer
     "q_delta_colmap_overwrite" -> ((s, d) => {
-      val path = "/root/repo/target/tmp/customer_delta_colmap_ow"
+      val path = s"$ScratchRoot/customer_delta_colmap_ow"
       val c = t(s, d, "customer").toDF
       // v0 of generation 1: the mapped fixture
       graft.sources.DeltaLog.writeNameMapped(
@@ -1223,7 +1230,7 @@ object SparkEntry {
     // metaData annotations — and the table then appends and upserts like
     // any mapped table
     "q_delta_colmap_write" -> ((s, d) => {
-      val path = "/root/repo/target/tmp/customer_delta_colmap_opt"
+      val path = s"$ScratchRoot/customer_delta_colmap_opt"
       val c = t(s, d, "customer").toDF
       Writers.writeDeltaTable(c.where(col("c_custkey") % 2 === 0),
         "overwrite", path, columnMapping = Some("name"))
@@ -1244,7 +1251,7 @@ object SparkEntry {
     // native field-id matching. Same aggregate contract as
     // q_delta_colmap's base.
     "q_delta_colmap_id" -> ((s, d) => {
-      val path = "/root/repo/target/tmp/customer_delta_colmap_id"
+      val path = s"$ScratchRoot/customer_delta_colmap_id"
       val c = t(s, d, "customer").toDF
         .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"))
       graft.sources.DeltaLog.writeIdMapped(
@@ -1274,7 +1281,7 @@ object SparkEntry {
     // q_delta_colmap_id_cow: append %10==7 at +500, upsert %10==1 to
     // +1000, delete %10==4, OPTIMIZE.
     "q_delta_colmap_part" -> ((s, d) => {
-      val path = "/root/repo/target/tmp/customer_delta_colmap_part"
+      val path = s"$ScratchRoot/customer_delta_colmap_part"
       val c = t(s, d, "customer").toDF
         .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"))
       graft.sources.DeltaLog.writeNameMapped(
@@ -1304,7 +1311,7 @@ object SparkEntry {
     // fixture v0, append %10==7 at +500 (v1), upsert %10==1 to +1000
     // (v2), copy-on-write delete %10==4 (v3), OPTIMIZE compaction (v4).
     "q_delta_colmap_id_cow" -> ((s, d) => {
-      val path = "/root/repo/target/tmp/customer_delta_colmap_id_cow"
+      val path = s"$ScratchRoot/customer_delta_colmap_id_cow"
       val c = t(s, d, "customer").toDF
         .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"))
       graft.sources.DeltaLog.writeIdMapped(
@@ -1331,7 +1338,7 @@ object SparkEntry {
     // name through the schema annotations. Grouping by the partition
     // column itself makes a wrong directory-resolution unmissable.
     "q_delta_colmap_id_part" -> ((s, d) => {
-      val path = "/root/repo/target/tmp/customer_delta_colmap_id_part"
+      val path = s"$ScratchRoot/customer_delta_colmap_id_part"
       val c = t(s, d, "customer").toDF
         .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"))
       graft.sources.DeltaLog.writeIdMapped(c, path,
@@ -1349,7 +1356,7 @@ object SparkEntry {
     // that follows exercises the returned full-maintenance surface. The
     // oracle recomputes all three predicates straight from customer.
     "q_delta_dv_purge" -> ((s, d) => {
-      val path = "/root/repo/target/tmp/customer_delta_dv_purge"
+      val path = s"$ScratchRoot/customer_delta_dv_purge"
       val c = t(s, d, "customer").toDF
         .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"))
         .repartition(4, col("c_custkey"))
@@ -1370,7 +1377,7 @@ object SparkEntry {
     // from the checkpoint parquet alone. This is the bounded-replay path
     // a long-lived delete-heavy 100 TB table lives on.
     "q_delta_dv_checkpoint" -> ((s, d) => {
-      val path = "/root/repo/target/tmp/customer_delta_dv_cp"
+      val path = s"$ScratchRoot/customer_delta_dv_cp"
       val c = t(s, d, "customer").toDF
         .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"))
         .repartition(4, col("c_custkey"))
@@ -1393,7 +1400,7 @@ object SparkEntry {
     // through the snapshot reader and aggregated. The oracle recomputes
     // the survivors straight from the customer table.
     "q_delta_dv" -> ((s, d) => {
-      val path = "/root/repo/target/tmp/customer_delta_dv"
+      val path = s"$ScratchRoot/customer_delta_dv"
       val c = t(s, d, "customer").toDF
         .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"))
         .repartition(4, col("c_custkey"))
@@ -1410,7 +1417,7 @@ object SparkEntry {
     // UNIONS them with the fixture's existing ones, no data file is
     // rewritten. The oracle recomputes both predicates from customer.
     "q_delta_dv_delete" -> ((s, d) => {
-      val path = "/root/repo/target/tmp/customer_delta_dv_del"
+      val path = s"$ScratchRoot/customer_delta_dv_del"
       val c = t(s, d, "customer").toDF
         .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"))
         .repartition(4, col("c_custkey"))
@@ -1432,7 +1439,7 @@ object SparkEntry {
     // the now-DV-free snapshot. The oracle recomputes the whole history
     // straight from customer.
     "q_delta_dv_cow" -> ((s, d) => {
-      val path = "/root/repo/target/tmp/customer_delta_dv_cow"
+      val path = s"$ScratchRoot/customer_delta_dv_cow"
       val c = t(s, d, "customer").toDF
         .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"))
         .repartition(4, col("c_custkey"))
@@ -1460,7 +1467,7 @@ object SparkEntry {
     // successive DV deletes give two delete windows; the oracle
     // recomputes each predicate delta straight from customer.
     "q_delta_dv_changes" -> ((s, d) => {
-      val path = "/root/repo/target/tmp/customer_delta_dv_cdf"
+      val path = s"$ScratchRoot/customer_delta_dv_cdf"
       val pp = java.nio.file.Paths.get(path)
       if (java.nio.file.Files.exists(pp)) {
         java.nio.file.Files.walk(pp).sorted(java.util.Comparator.reverseOrder())
@@ -1489,7 +1496,7 @@ object SparkEntry {
     // exactly the two append windows — per-version row sets recomputed by
     // the oracle straight from the customer table
     "q_delta_changes" -> ((s, d) => {
-      val path = "/root/repo/target/tmp/customer_delta_cdf"
+      val path = s"$ScratchRoot/customer_delta_cdf"
       val pp = java.nio.file.Paths.get(path)
       if (java.nio.file.Files.exists(pp)) {
         java.nio.file.Files.walk(pp).sorted(java.util.Comparator.reverseOrder())
@@ -1513,7 +1520,7 @@ object SparkEntry {
     // the oracle recomputes it straight from customer. A restore that
     // resurrects the deleted rows wrongly (or fails to) mismatches.
     "q_delta_restore" -> ((s, d) => {
-      val path = "/root/repo/target/tmp/customer_delta_restore"
+      val path = s"$ScratchRoot/customer_delta_restore"
       val pp = java.nio.file.Paths.get(path)
       if (java.nio.file.Files.exists(pp)) {
         java.nio.file.Files.walk(pp).sorted(java.util.Comparator.reverseOrder())
@@ -1531,7 +1538,7 @@ object SparkEntry {
     }),
 
     "q_delta_time_travel" -> ((s, d) => {
-      val path = "/root/repo/target/tmp/customer_delta_tt"
+      val path = s"$ScratchRoot/customer_delta_tt"
       // wipe: overwrite is version-preserving now, so a leftover table
       // from another scale factor's run would keep ITS version 0 — the
       // fixture needs version numbers anchored at this run's data
@@ -1555,7 +1562,7 @@ object SparkEntry {
     // read asks for a point between them — it must resolve to v0, the
     // pre-append snapshot the oracle recomputes straight from customer
     "q_delta_time_travel_ts" -> ((s, d) => {
-      val path = "/root/repo/target/tmp/customer_delta_tt_ts"
+      val path = s"$ScratchRoot/customer_delta_tt_ts"
       // wipe: version-preserving overwrite would keep a previous run's
       // commits — the mtime stamping below enumerates versions 0..1
       val pp = java.nio.file.Paths.get(path)
@@ -1586,7 +1593,7 @@ object SparkEntry {
     // whose add-action stats admit the range are opened — DeltaStats);
     // the oracle recomputes the filtered agg from the raw table
     "q_delta_skipping" -> ((s, d) => {
-      val path = "/root/repo/target/tmp/orders_delta_skip"
+      val path = s"$ScratchRoot/orders_delta_skip"
       val o = t(s, d, "orders").toDF
       Writers.writeDeltaTable(
         o.repartitionByRange(8, col("o_orderkey")).sortWithinPartitions("o_orderkey"),
@@ -1602,7 +1609,7 @@ object SparkEntry {
     // remove+add commit) — the read-back must be byte-identical to the
     // pre-optimize table
     "q_delta_optimize" -> ((s, d) => {
-      val path = "/root/repo/target/tmp/customer_delta_opt"
+      val path = s"$ScratchRoot/customer_delta_opt"
       val c = t(s, d, "customer").toDF
       Writers.writeDeltaTable(c.repartition(12), "overwrite", path)
       Writers.optimizeDeltaTable(s, path)
@@ -1626,7 +1633,7 @@ object SparkEntry {
 
     // JSON-spec document form of with_schema (reference schema_from_json)
     "q_with_schema_json" -> ((s, d) => {
-      val path = "/root/repo/target/tmp/customer_schema_json.csv"
+      val path = s"$ScratchRoot/customer_schema_json.csv"
       Writers.writeCsvSingle(t(s, d, "customer").toDF, "overwrite", path)
       Loaders.loadWithSchemaJson(s, path, "customer_wsj",
         """{"fields":[
@@ -1642,7 +1649,7 @@ object SparkEntry {
 
     // parquet append-rewrite writer (reference write_to_parquet append)
     "q_write_append" -> ((s, d) => {
-      val path = "/root/repo/target/tmp/customer_app.parquet"
+      val path = s"$ScratchRoot/customer_app.parquet"
       java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(path))
       val c = t(s, d, "customer").toDF
       Writers.writeParquetSingle(c, "overwrite", path)
@@ -1672,7 +1679,7 @@ object SparkEntry {
           s"<c_mktsegment>${r.getString(1)}</c_mktsegment>" +
           s"<c_acctbal>${r.getDouble(2)}</c_acctbal></customer>")
         .mkString("<customers>", "", "</customers>")
-      val path = java.nio.file.Paths.get("/root/repo/target/tmp/customer_rt.xml")
+      val path = java.nio.file.Paths.get(s"$ScratchRoot/customer_rt.xml")
       java.nio.file.Files.createDirectories(path.getParent)
       java.nio.file.Files.writeString(path, xml)
       sources.XmlLoader.load(s, path.toString, "cust_xml", Some("customer"))
@@ -1685,7 +1692,7 @@ object SparkEntry {
     // inserts), snapshot read-back — the oracle recomputes the merged
     // state relationally (updates ∪ non-matched base)
     "q_delta_upsert" -> ((s, d) => {
-      val path = "/root/repo/target/tmp/delta_upsert_q"
+      val path = s"$ScratchRoot/delta_upsert_q"
       val base = t(s, d, "customer").toDF
         .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"))
         .where(col("c_custkey") <= 100)
@@ -1716,7 +1723,7 @@ object SparkEntry {
           s"<c_mktsegment>${r.getString(1)}</c_mktsegment>" +
           s"<c_acctbal>${r.getDouble(2)}</c_acctbal></customer>")
         .mkString("<?xml version=\"1.0\"?>\n<customers>\n", "\n", "\n</customers>")
-      val path = java.nio.file.Paths.get("/root/repo/target/tmp/customer_big.xml")
+      val path = java.nio.file.Paths.get(s"$ScratchRoot/customer_big.xml")
       java.nio.file.Files.createDirectories(path.getParent)
       java.nio.file.Files.writeString(path, xml)
       sources.XmlLoader.loadSingleFileDistributed(s, path.toString, "cust_bigxml", "customer")
@@ -1727,7 +1734,7 @@ object SparkEntry {
 
     // Excel loader/writer (reference excel.rs): xlsx roundtrip
     "q_excel_load" -> ((s, d) => {
-      val path = "/root/repo/target/tmp/customer_rt.xlsx"
+      val path = s"$ScratchRoot/customer_rt.xlsx"
       sources.ExcelLoader.write(t(s, d, "customer").toDF
         .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal")), path)
       sources.ExcelLoader.load(s, path, "cust_xlsx")
@@ -1738,7 +1745,7 @@ object SparkEntry {
 
     // CSV smart loader round-trip (§2.1) + single-file writer (§2.2)
     "q_csv_roundtrip" -> ((s, d) => {
-      val path = "/root/repo/target/tmp/customer_rt.csv"
+      val path = s"$ScratchRoot/customer_rt.csv"
       Writers.writeCsvSingle(t(s, d, "customer").toDF, "overwrite", path)
       Loaders.loadCsv(s, path, "customer_rt")
         .select("c_mktsegment")
@@ -1754,7 +1761,7 @@ object SparkEntry {
     // hash gate. DuckDB cannot read ORC — the roundtrip-vs-parquet
     // shape is what makes the format independently gradable.
     "q_orc_roundtrip" -> ((s, d) => {
-      val path = "/root/repo/target/tmp/orders_rt.orc"
+      val path = s"$ScratchRoot/orders_rt.orc"
       Writers.writeOrcSingle(t(s, d, "orders").toDF, "overwrite", path)
       Loaders.load(s, path, "orders_rt")
         .select("o_orderstatus")
@@ -1771,7 +1778,7 @@ object SparkEntry {
     // while Spark's writer quotes exactly — the loader lowercases on
     // load, so the result speaks the oracle's column vocabulary.
     "q_jdbc_roundtrip" -> ((s, d) => {
-      val url = "jdbc:derby:/root/repo/target/tmp/derby_graft_q;create=true"
+      val url = s"jdbc:derby:$ScratchRoot/derby_graft_q;create=true"
       val c = t(s, d, "customer").toDF
         .select(col("c_custkey").as("C_CUSTKEY"),
           col("c_mktsegment").as("C_MKTSEGMENT"),
@@ -1861,7 +1868,7 @@ object SparkEntry {
       val docs = t(s, d, "documents").df
       val batch = docs.where(col("doc_id") < 50)
       val corpus = docs.where(col("doc_id") >= 50)
-      val idxPath = "/root/repo/target/tmp/minhash_band_index"
+      val idxPath = s"$ScratchRoot/minhash_band_index"
       Dedup.minhashBandIndex(corpus, "text", "doc_id",
         numHashes = 128, bands = 32, shingleWords = 3)
         .write.mode("overwrite").parquet(idxPath)
@@ -1881,7 +1888,7 @@ object SparkEntry {
     // oracle recomputes the full cross-batch pair set from scratch, so a
     // double-append, a missed window, or a stale index all fail the hash.
     "q_incremental_pipeline" -> ((s, d) => {
-      val root = "/root/repo/target/tmp/incr_pipeline"
+      val root = s"$ScratchRoot/incr_pipeline"
       val pp = java.nio.file.Paths.get(root)
       if (java.nio.file.Files.exists(pp)) {
         java.nio.file.Files.walk(pp).sorted(java.util.Comparator.reverseOrder())
@@ -2418,7 +2425,7 @@ object SparkEntry {
     // filesystem-reported length, and the pixel decode must all agree
     // with the bytes at rest.
     "q_binary_folder" -> ((s, d) => {
-      val dir = "/root/repo/target/tmp/binfolder"
+      val dir = s"$ScratchRoot/binfolder"
       val p = java.nio.file.Paths.get(dir)
       if (java.nio.file.Files.exists(p)) {
         java.nio.file.Files.walk(p).sorted(java.util.Comparator.reverseOrder())
@@ -2530,7 +2537,7 @@ object SparkEntry {
     // or mangling across the shard/compress/parse cycle (row drops,
     // unicode, numeric widening) fails the hash gate.
     "q_jsonl_roundtrip" -> ((s, d) => {
-      val dir = "/root/repo/target/tmp/jsonl_rt"
+      val dir = s"$ScratchRoot/jsonl_rt"
       Writers.writeJsonlDir(
         t(s, d, "documents").df.select(col("doc_id"), col("lang"), col("text")),
         "overwrite", dir, numShards = 4)
@@ -2550,7 +2557,7 @@ object SparkEntry {
     // Spark's wholetext read and DuckDB's read_text of the same bytes
     // hash-mismatches the row.
     "q_text_folder" -> ((s, d) => {
-      val dir = "/root/repo/target/tmp/txtfolder"
+      val dir = s"$ScratchRoot/txtfolder"
       val p = java.nio.file.Paths.get(dir)
       if (java.nio.file.Files.exists(p)) {
         java.nio.file.Files.walk(p).sorted(java.util.Comparator.reverseOrder())
@@ -2785,7 +2792,7 @@ object SparkEntry {
     // corpus fingerprints once to parquet, the batch joins against it
     "q_winnow_incremental" -> ((s, d) => {
       val docs = t(s, d, "documents").df
-      val idxPath = "/root/repo/target/tmp/winnow_index_graded"
+      val idxPath = s"$ScratchRoot/winnow_index_graded"
       graft.operators.Corpus.winnowFingerprints(docs, "text", "doc_id")
         .write.mode("overwrite").parquet(idxPath)
       val idx = s.read.parquet(idxPath)
@@ -4210,7 +4217,7 @@ object SparkEntry {
         "CAST(regexp_extract(filename, 'img_(\\d+)\\.', 1) AS BIGINT) % 256 AS mean_r, " +
         "CAST(regexp_extract(filename, 'img_(\\d+)\\.', 1) AS BIGINT) * 7 % 256 AS mean_g, " +
         "CAST(regexp_extract(filename, 'img_(\\d+)\\.', 1) AS BIGINT) * 13 % 256 AS mean_b " +
-        "FROM read_blob('/root/repo/target/tmp/binfolder/*')"),
+        s"FROM read_blob('$ScratchRoot/binfolder/*')"),
 
     // planted STREAMINFO values recomputed from doc_id; // is DuckDB's
     // truncating integer division (operands positive), matching Spark's
@@ -4273,7 +4280,7 @@ object SparkEntry {
         "CAST(length(content) AS BIGINT) AS n_chars, " +
         "CAST(length(content) - length(replace(content, chr(10), '')) AS BIGINT) AS n_lines, " +
         "md5(content) AS content_md5 " +
-        "FROM read_text('/root/repo/target/tmp/txtfolder/*.txt')"),
+        s"FROM read_text('$ScratchRoot/txtfolder/*.txt')"),
 
     "q_media_pipeline" ->
       ("WITH m AS (SELECT doc_id, lang, " +

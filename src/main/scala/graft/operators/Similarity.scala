@@ -295,24 +295,6 @@ object Similarity {
         col("graft_list").cast(idt).as("list_id"))
   }
 
-  /** Candidate (point, centroid) pair count and meta width of the
-    * two-level assign over a corpus — the scale instrumentation behind
-    * the √N claim: end-to-end wall time hides the assign term at bench
-    * scales (the 1/targetListSize constant), so the growth of the
-    * candidate JOIN SIZE itself is what a scale check must record.
-    * Per-point assign work = candidates/N + m (the meta-stage distances).
-    */
-  def twoLevelAssignStats(corpus: DataFrame, vecCol: String, idCol: String,
-      nlist: Int, metaProbes: Int = DefaultMetaProbes): (Long, Int) = {
-    val c = corpus.select(col(idCol).as("corpus_id"), col(vecCol).as("cv"))
-    val cents = seedAndRefine(c, nlist, 1)
-    val m = math.max(metaProbes, math.ceil(math.sqrt(nlist.toDouble)).toInt)
-    val cand = twoLevelCandidates(
-      c.select(col("corpus_id").as("graft_pid"), col("cv").as("graft_pv")),
-      cents, nlist, metaProbes).count()
-    (cand, m)
-  }
-
   /** Each query's `nprobe` nearest centroid lists (deterministic cent_id
     * tie-break) — shared by the in-memory and indexed probe paths. Routes
     * flat (broadcast all centroids + per-query window) below

@@ -1,5 +1,6 @@
 package graft.sources
 
+import com.fasterxml.jackson.databind.JsonNode
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{array_join, coalesce, col, expr, input_file_name, lit, slice, split}
@@ -238,168 +239,158 @@ object DeltaLog {
       s""""createdTime":${System.currentTimeMillis()}}}"""
   }
 
-  /** The table's stable metaData.id from the newest metaData action —
-    * post-checkpoint commits newest→oldest, checkpoint fallback.
+  /** A table's log-level state as of one version — what every metadata
+    * lookup reads: the newest metaData (id, schemaString,
+    * partitionColumns, configuration), the newest protocol (reader and
+    * writer versions and feature lists; the floor (1, 1, Nil, Nil) when
+    * the log has none), the highest txn version per appId and the
+    * configuration of each live domainMetadata. Built by [[tableState]].
     */
-  private def tableMetaDataId(spark: SparkSession, fs: FileSystem,
-      tbl: HPath): Option[String] = {
-    import com.fasterxml.jackson.databind.ObjectMapper
-    val mapper = new ObjectMapper()
-    def idOf(json: String): Option[String] = {
-      val node = try mapper.readTree(json) catch { case _: Exception => null }
-      val m = if (node == null) null
-        else if (node.has("metaData")) node.get("metaData") else node
-      if (m == null || !m.isObject) None
-      else Option(m.get("id")).filterNot(_.isNull).map(_.asText)
-    }
-    val log = logDir(tbl)
-    val cpFloor = lastCheckpointVersion(fs, log)
-    existingVersions(fs, log).filter(v => cpFloor.forall(v > _))
-      .reverse.iterator.flatMap { v =>
-        readString(fs, new HPath(log, commitName(v))).linesIterator
-          .filter(_.contains("\"metaData\"")).flatMap(idOf).toSeq.lastOption
-      }.nextOption()
-      .orElse(cpFloor.flatMap(v => readCheckpoint(spark, fs, log, v))
-        .flatMap { cp =>
-          if (!cp.columns.contains("metaData")) None
-          else cp.where(col("metaData").isNotNull)
-            .select(org.apache.spark.sql.functions.to_json(col("metaData")))
-            .collect().headOption.flatMap(r => idOf(r.getString(0)))
-        })
-  }
+  private[sources] final case class TableState(metaDataId: Option[String],
+      schemaString: Option[String], partitionColumns: Option[Seq[String]],
+      configuration: Map[String, String],
+      protocol: (Int, Int, Seq[String], Seq[String]),
+      txns: Map[String, Long], domains: Map[String, String]) {
 
-  /** Newest committed SetTransaction version for `appId` — commits
-    * newest-first (driver-side Jackson over the tiny files), falling back
-    * to the checkpoint parquet when older commits were cleaned up.
-    * Returns None when the log doesn't exist or carries no txn for the
-    * app.
-    */
-  private[sources] def latestTxnVersion(spark: SparkSession, fs: FileSystem,
-      log: HPath, appId: String): Option[Long] = {
-    if (!fs.exists(log)) return None
-    import com.fasterxml.jackson.databind.ObjectMapper
-    val mapper = new ObjectMapper()
-    val fromCommits = existingVersions(fs, log).reverse.iterator.flatMap { v =>
-      readString(fs, new HPath(log, commitName(v))).linesIterator.flatMap { line =>
-        val node = try mapper.readTree(line) catch { case _: Exception => null }
-        val t = if (node == null) null else node.get("txn")
-        if (t != null && t.get("appId") != null &&
-            t.get("appId").asText == appId && t.get("version") != null)
-          Some(t.get("version").asLong)
-        else None
-      }
-    }.maxOption
-    fromCommits.orElse(lastCheckpointVersion(fs, log).flatMap { v =>
-      readCheckpoint(spark, fs, log, v).flatMap { df =>
-        if (!df.columns.contains("txn")) None
-        else df.where(col("txn").isNotNull && col("txn.appId") === appId)
-          .agg(org.apache.spark.sql.functions.max(col("txn.version")))
-          .collect().headOption.flatMap(r =>
-            if (r.isNullAt(0)) None else Some(r.getLong(0)))
-      }
-    })
-  }
-
-  /** Partition columns of the latest metaData action in the log (newest
-    * commit wins — merge commits refresh metaData). Driver-side Jackson
-    * parse of the tiny commit files.
-    */
-  private def latestPartitionColumns(fs: FileSystem, log: HPath,
-      asOf: Option[Long] = None): Option[Seq[String]] = {
-    import com.fasterxml.jackson.databind.ObjectMapper
-    val mapper = new ObjectMapper()
-    existingVersions(fs, log).filter(v => asOf.forall(v <= _))
-      .reverse.iterator.flatMap { v =>
-      val text = readString(fs, new HPath(log, commitName(v)))
-      text.linesIterator.flatMap { line =>
-        val node = try mapper.readTree(line) catch { case _: Exception => null }
-        val md = if (node == null) null else node.get("metaData")
-        val pc = if (md == null) null else md.get("partitionColumns")
-        if (pc != null && pc.isArray) {
-          val cols = scala.collection.mutable.ArrayBuffer.empty[String]
-          pc.forEach(c => cols += c.asText)
-          Some(cols.toSeq)
-        } else None
-      }.toSeq.lastOption // last metaData within the newest commit that has one
-    }.nextOption()
-  }
-
-  /** Table partition columns from the newest metaData — commits first,
-    * checkpoint fallback when older commits were cleaned up. `asOf`
-    * bounds the search like [[tableSchemaJson]]: a time-travel read
-    * resolves against the metaData AS OF that version (an overwrite may
-    * re-partition a table; its layout must not leak backwards).
-    */
-  private def tablePartitionColumns(spark: SparkSession, fs: FileSystem,
-      tbl: HPath, asOf: Option[Long] = None): Option[Seq[String]] = {
-    val cacheKey = (logIdentity(fs, tbl), asOf.getOrElse(-1L))
-    val hit = partColsCache.get(cacheKey)
-    if (hit != null) return hit
-    val result = latestPartitionColumns(fs, logDir(tbl), asOf)
-      .orElse(lastCheckpointVersion(fs, logDir(tbl))
-        .filter(v => asOf.forall(v <= _)).flatMap { v =>
-        readCheckpoint(spark, fs, logDir(tbl), v).flatMap { cp =>
-        if (cp.columns.contains("metaData")) {
-          val rows = cp.where(col("metaData").isNotNull)
-            .select(col("metaData.partitionColumns")).collect()
-          rows.headOption.map(_.getSeq[String](0))
-        } else None
-      }})
-    if (partColsCache.size > 256) partColsCache.clear() // bound, not LRU
-    partColsCache.put(cacheKey, result)
-    result
-  }
-
-  /** Table schema JSON (metaData.schemaString) — newest commit first,
-    * checkpoint fallback. Same visibility rule as partition columns.
-    * `asOf` bounds the search to commits ≤ that version (the schema a
-    * time-travel read must resolve against — metaData time-travels with
-    * the data, so a post-asOf schema evolution must not leak backwards).
-    */
-  private def tableSchemaJson(spark: SparkSession, fs: FileSystem,
-      tbl: HPath, asOf: Option[Long] = None): Option[String] = {
-    import com.fasterxml.jackson.databind.ObjectMapper
-    val cacheKey = (logIdentity(fs, tbl), asOf.getOrElse(-1L))
-    val hit = schemaCache.get(cacheKey)
-    if (hit != null) return hit
-    val mapper = new ObjectMapper()
-    val log = logDir(tbl)
-    val versions = existingVersions(fs, log)
-      .filter(v => asOf.forall(v <= _))
-    val fromCommits = versions.reverse.iterator.flatMap { v =>
-      readString(fs, new HPath(log, commitName(v))).linesIterator.flatMap { line =>
-        val node = try mapper.readTree(line) catch { case _: Exception => null }
-        val md = if (node == null) null else node.get("metaData")
-        val ss = if (md == null) null else md.get("schemaString")
-        if (ss != null && ss.isTextual) Some(ss.asText) else None
-      }.toSeq.lastOption
-    }.nextOption()
-    val result = fromCommits.orElse(lastCheckpointVersion(fs, log)
-      .filter(v => asOf.forall(v <= _)).flatMap { v =>
-      readCheckpoint(spark, fs, log, v).flatMap { cp =>
-        if (cp.columns.contains("metaData")) {
-          val rows = cp.where(col("metaData").isNotNull)
-            .select(col("metaData.schemaString")).collect()
-          rows.headOption.map(_.getString(0))
-        } else None
-      }
-    })
-    if (schemaCache.size > 256) schemaCache.clear() // bound, not LRU
-    schemaCache.put(cacheKey, result)
-    result
-  }
-
-  /** [[tableSchemaJson]] parsed to a StructType — None when the log has no
-    * schemaString or it doesn't parse (foreign/v0 writers), which is
-    * exactly when a reader must fall back to file footers.
-    */
-  private def parsedTableSchema(spark: SparkSession, fs: FileSystem,
-      tbl: HPath, asOf: Option[Long] = None): Option[StructType] =
-    tableSchemaJson(spark, fs, tbl, asOf).flatMap { js =>
+    /** schemaString as a StructType — None when the log has none or it
+      * doesn't parse (foreign/v0 writers), which is exactly when a reader
+      * must fall back to file footers.
+      */
+    lazy val schema: Option[StructType] = schemaString.flatMap { js =>
       try Some(org.apache.spark.sql.types.DataType.fromJson(js)
         .asInstanceOf[StructType])
       catch { case _: Exception => None }
     }
+
+    /** `delta.columnMapping.mode`; "none" when unset. */
+    def mappingMode: String =
+      configuration.getOrElse("delta.columnMapping.mode", "none")
+
+    /** The live domain `d`'s configuration, parsed. */
+    def domainConfig(d: String): Option[JsonNode] = domains.get(d).flatMap(cs =>
+      try Option(new com.fasterxml.jackson.databind.ObjectMapper().readTree(cs))
+      catch { case _: Exception => None })
+
+    /** Newest row-tracking high-water mark; -1 when the table has never
+      * assigned a row id.
+      */
+    def rowIdHighWaterMark: Long = domainConfig(RowTrackingDomain)
+      .flatMap(field(_, "rowIdHighWaterMark")).fold(-1L)(_.asLong)
+  }
+
+  private def field(a: JsonNode, f: String): Option[JsonNode] =
+    Option(a.get(f)).filterNot(_.isNull)
+
+  private def texts(a: JsonNode, f: String): Seq[String] = {
+    val b = scala.collection.mutable.ArrayBuffer.empty[String]
+    field(a, f).filter(_.isArray).foreach(_.forEach(x => b += x.asText))
+    b.toSeq
+  }
+
+  /** (minReader, minWriter, readerFeatures, writerFeatures) of a
+    * protocol action.
+    */
+  private def protocolOf(p: JsonNode): (Int, Int, Seq[String], Seq[String]) =
+    (field(p, "minReaderVersion").fold(1)(_.asInt(1)),
+      field(p, "minWriterVersion").fold(1)(_.asInt(1)),
+      texts(p, "readerFeatures"), texts(p, "writerFeatures"))
+
+  private val TableActionKinds =
+    Seq("metaData", "protocol", "txn", "domainMetadata")
+
+  /** Replay accumulator of the table-level actions, under the checkpoint
+    * fold's rules: the newest metaData and protocol, the highest-version
+    * txn per appId, the newest domainMetadata per domain (a removed one
+    * drops the domain). [[tableState]] and [[driverCheckpointFold]] both
+    * fold through it.
+    */
+  private final class TableActions {
+    var metaData, protocol = Option.empty[JsonNode]
+    val txns = scala.collection.mutable.LinkedHashMap.empty[Option[String], JsonNode]
+    private val domains =
+      scala.collection.mutable.LinkedHashMap.empty[Option[String], JsonNode]
+    private def txnVersion(t: JsonNode): Long =
+      field(t, "version").fold(Long.MinValue)(_.asLong)
+
+    def visit(kind: String, a: JsonNode): Unit = kind match {
+      case "metaData" => metaData = Some(a)
+      case "protocol" => protocol = Some(a)
+      case "txn" =>
+        val app = field(a, "appId").map(_.asText)
+        if (txns.get(app).forall(o => txnVersion(a) >= txnVersion(o)))
+          txns(app) = a
+      case "domainMetadata" => domains(field(a, "domain").map(_.asText)) = a
+      case _ =>
+    }
+
+    def liveDomains: Iterable[JsonNode] =
+      domains.values.filterNot(d => field(d, "removed").exists(_.asBoolean))
+
+    def state: TableState = {
+      val conf = metaData.flatMap(field(_, "configuration")).filter(_.isObject)
+        .fold(Map.empty[String, String]) { c =>
+          val b = Map.newBuilder[String, String]
+          c.fields().forEachRemaining { e =>
+            b += e.getKey -> (if (e.getValue.isNull) null else e.getValue.asText)
+          }
+          b.result()
+        }
+      TableState(metaData.flatMap(field(_, "id")).map(_.asText),
+        metaData.flatMap(field(_, "schemaString")).filter(_.isTextual)
+          .map(_.asText),
+        metaData.map(texts(_, "partitionColumns")), conf,
+        protocol.fold((1, 1, Seq.empty[String], Seq.empty[String]))(protocolOf),
+        txns.collect { case (Some(app), t) if field(t, "version").nonEmpty =>
+          app -> txnVersion(t) }.toMap,
+        liveDomains.flatMap(d => field(d, "domain").map(_.asText ->
+          field(d, "configuration").fold("")(_.asText))).toMap)
+    }
+  }
+
+  /** Memo for [[tableState]] keyed by [[logIdentity]] and the as-of
+    * version (-1 = latest): a new or rewritten commit changes the key,
+    * and older versions are immutable.
+    */
+  private val tableStates = new java.util.concurrent.ConcurrentHashMap[
+    ((String, Long, Long, Long, Long), Long), TableState]()
+
+  /** [[TableState]] of `tbl` as of `asOf` (None = latest), memoized. */
+  private[sources] def tableState(spark: SparkSession, fs: FileSystem,
+      tbl: HPath, asOf: Option[Long] = None): TableState = {
+    val key = (logIdentity(fs, tbl), asOf.getOrElse(-1L))
+    val hit = tableStates.get(key)
+    if (hit != null) return hit
+    val state = foldTableState(spark, fs, tbl, asOf)
+    if (tableStates.size > 256) tableStates.clear() // bound, not LRU
+    tableStates.put(key, state)
+    state
+  }
+
+  /** [[TableState]] of `tbl` as of `asOf`, folded with one
+    * [[replayActions]] call. While every commit 0..asOf is still in the
+    * log, the fold reads those commits on the driver and no checkpoint,
+    * so it starts no Spark job. Once some were cleaned ([[cleanupLog]]),
+    * it folds the newest checkpoint ≤ asOf (one collect) plus the
+    * commits after it.
+    */
+  private[sources] def foldTableState(spark: SparkSession, fs: FileSystem,
+      tbl: HPath, asOf: Option[Long]): TableState = {
+    val log = logDir(tbl)
+    val commits = existingVersions(fs, log).filter(v => asOf.forall(v <= _))
+    val complete =
+      commits.headOption.contains(0L) && commits.last == commits.size - 1
+    val cp = if (complete) None
+      else lastCheckpointVersion(fs, log).filter(v => asOf.forall(v <= _))
+    val acc = new TableActions
+    replayActions(spark, fs, log, tbl.toString, cp,
+      commits.filter(v => cp.forall(v > _)),
+      TableActionKinds, TableActionKinds)(acc.visit)
+    acc.state
+  }
+
+  private def parsedTableSchema(spark: SparkSession, fs: FileSystem,
+      tbl: HPath, asOf: Option[Long] = None): Option[StructType] =
+    tableState(spark, fs, tbl, asOf).schema
 
   /** The protocol's legal LOSSLESS scalar widenings (typeWidening table
     * feature): the integral chain, float→double, integrals→double,
@@ -602,17 +593,12 @@ object DeltaLog {
     * carrying the merged schema). Every `checkpointInterval` commits the
     * reconciled snapshot is checkpointed (see [[writeCheckpoint]]) so log
     * replay stays O(interval) commits instead of O(history).
-    *
-    * `acceptCdfOverwrite` is a retired compatibility alias: overwrite no
-    * longer restarts the log, so CDF tables overwrite without any opt-in
-    * (the commit's whole-file removes/adds serve the feed exactly).
     */
   def write(df: DataFrame, mode: String, path: String,
       partitionBy: Seq[String] = Nil, checkpointInterval: Int = 10,
       txn: Option[(String, Long)] = None,
       tableProperties: Map[String, String] = Map.empty,
       columnMapping: Option[String] = None,
-      acceptCdfOverwrite: Boolean = false,
       snapshotDriverMaxBytes: Long = SnapshotDriverMaxBytes): Unit = {
     val spark = df.sparkSession
     val conf = spark.sparkContext.hadoopConfiguration
@@ -628,7 +614,7 @@ object DeltaLog {
     // txn watermark survives log cleanup because [[writeCheckpoint]]
     // folds the newest txn per appId into the checkpoint.
     if (txn.exists { case (appId, v) =>
-        latestTxnVersion(spark, fs, logDir(tbl), appId).exists(_ >= v) })
+        tableState(spark, fs, tbl).txns.get(appId).exists(_ >= v) })
       return
     // "fresh" = this commit starts a new log (version 0): any mode when
     // the log doesn't exist yet. An append/merge bootstrap ADOPTS any
@@ -707,7 +693,7 @@ object DeltaLog {
       }
     }
     val priorConf: Map[String, String] =
-      if (hasLog) tableConfiguration(spark, fs, tbl) else Map.empty
+      if (hasLog) tableState(spark, fs, tbl).configuration else Map.empty
     val freshMappedMode: String =
       if (m != "overwrite") "none"
       else columnMapping.getOrElse(
@@ -748,6 +734,7 @@ object DeltaLog {
       } else freshMinted
     val mappedSchema: Option[StructType] = mappedInfo.map(_._2)
     val idMapped = mappedInfo.exists(_._1 == "id")
+    requireFieldIdWrite(spark, idMapped, "write_delta")
     // mapped PARTITIONED writes stage under PHYSICAL partition directory
     // names (the delta colmap layout); the caller speaks logical
     val stagePartitionBy: Seq[String] = mappedSchema match {
@@ -766,7 +753,7 @@ object DeltaLog {
       // appends must match the table's declared partitioning — silently
       // mixing layouts would corrupt partition inference on read. Falls
       // back to the checkpoint's metaData when older commits were cleaned.
-      val tableCols = tablePartitionColumns(spark, fs, tbl)
+      val tableCols = tableState(spark, fs, tbl).partitionColumns
       tableCols.foreach { cols =>
         // mapped tables: metaData.partitionColumns may be spelled
         // logically (delta-spark) or physically (other writers) — the
@@ -922,7 +909,7 @@ object DeltaLog {
       val extra = df.columns.filterNot(logical.fieldNames.contains)
       if (extra.isEmpty) None
       else {
-        val confMax = tableConfiguration(spark, fs, tbl)
+        val confMax = tableState(spark, fs, tbl).configuration
           .get("delta.columnMapping.maxColumnId")
           .flatMap(s => scala.util.Try(s.toLong).toOption).getOrElse(0L)
         // nested annotations count too (a foreign writer may annotate
@@ -988,10 +975,8 @@ object DeltaLog {
     }
     val w = dfToStage.write.mode("overwrite")
     try {
-    withFieldIdWriteIf(spark, idMapped) {
-      (if (stagePartitionBy.nonEmpty) w.partitionBy(stagePartitionBy: _*)
-       else w).parquet(stage.toString)
-    }
+    (if (stagePartitionBy.nonEmpty) w.partitionBy(stagePartitionBy: _*)
+     else w).parquet(stage.toString)
     // observed violation counts from the staging scan — abort pre-commit
     // (the finally sweeps the staged files; nothing was made visible)
     enforceObs.foreach { o =>
@@ -1068,7 +1053,7 @@ object DeltaLog {
     // files written before the widening keep their narrow physical type
     // and upcast at scan (the reader side this engine already carries)
     val typeWidenEnabled = !fresh &&
-      confEnabled(tableConfiguration(spark, fs, tbl),
+      confEnabled(tableState(spark, fs, tbl).configuration,
         "delta.enableTypeWidening")
     val evolvedAppendSchema: Option[StructType] =
       if (fresh || m != "append" || mappedSchema.nonEmpty) None
@@ -1134,7 +1119,7 @@ object DeltaLog {
         // version-preserving overwrite: the existing protocol stays
         // unless the new content NEEDS more (preserved configuration
         // means features never shrink, so only upgrades ever emit)
-        protocolUpgradeFor(tableFullProtocol(spark, fs, tbl),
+        protocolUpgradeFor(tableState(spark, fs, tbl).protocol,
           requiredProtocol).foreach(actions += _)
       // merge commits refresh metaData with the post-write merged schema —
       // EXCEPT on a mapped table, where the gate above already proved the
@@ -1192,7 +1177,7 @@ object DeltaLog {
           // (an overwrite may de-partition a table — the new layout
           // replaces the old, exactly like the schema does)
           if (version > 0L && partitionBy.isEmpty && m != "overwrite")
-            tablePartitionColumns(spark, fs, tbl).getOrElse(partitionBy)
+            tableState(spark, fs, tbl).partitionColumns.getOrElse(partitionBy)
           else partitionBy
         val metaConf =
           if (version == 0L || m == "overwrite") {
@@ -1236,7 +1221,7 @@ object DeltaLog {
             else base
           }
           else {
-            val base = tableConfiguration(spark, fs, tbl)
+            val base = tableState(spark, fs, tbl).configuration
             mappedEvolved match {
               case Some(ev) =>
                 // nested mints allocate ids below the top level too —
@@ -1248,7 +1233,7 @@ object DeltaLog {
           }
         actions += metaDataAction(schema.json, metaParts, metaConf,
           tableId = if (version == 0L) None
-            else tableMetaDataId(spark, fs, tbl))
+            else tableState(spark, fs, tbl).metaDataId)
       }
       // version-preserving overwrite: remove every file of the
       // pre-commit active set (dataChange=true — rows disappear), the
@@ -1269,7 +1254,7 @@ object DeltaLog {
         if (!rowTrackingEnabled(enforceConf)) Map.empty
         else {
           val hwm = if (version == 0L) -1L
-            else rowIdHighWaterMark(spark, fs, tbl)
+            else tableState(spark, fs, tbl).rowIdHighWaterMark
           val (byRel, newHwm) = assignBaseRowIds(fs, tbl,
             newFiles.map(_._1), statsByRel, hwm)
           actions += domainMetadataAction(newHwm)
@@ -1319,7 +1304,7 @@ object DeltaLog {
         // stop rather than double-commit; the just-moved files stay
         // unreferenced orphans for vacuum
         if (txn.exists { case (appId, v) =>
-            latestTxnVersion(spark, fs, logDir(tbl), appId).exists(_ >= v) })
+            tableState(spark, fs, tbl).txns.get(appId).exists(_ >= v) })
           committed = true
         else {
           // identity appends assigned their sequence values from the
@@ -1601,7 +1586,7 @@ object DeltaLog {
     // (update_preimage / update_postimage / insert) as _change_data +
     // cdc actions; on MAPPED tables commitRewrite stages the cdc files
     // under physical column names like data files
-    val rtConf = tableConfiguration(spark, fs, tbl)
+    val rtConf = tableState(spark, fs, tbl).configuration
     val cdfEmit = confEnabled(rtConf, "delta.enableChangeDataFeed")
     // row tracking: survivors keep their ids (materialized through the
     // hidden columns), updated rows inherit the matched row's id, and
@@ -1813,8 +1798,8 @@ object DeltaLog {
       cdcDf = cdcDf,
       extraMetaData = identityMetaSchema.map(s =>
         metaDataAction(s.json,
-          tablePartitionColumns(spark, fs, tbl).getOrElse(Nil), rtConf,
-          tableId = tableMetaDataId(spark, fs, tbl))),
+          tableState(spark, fs, tbl).partitionColumns.getOrElse(Nil), rtConf,
+          tableId = tableState(spark, fs, tbl).metaDataId)),
       // a lost slot rebases when the winners are key-disjoint (the
       // bounds predicate mirrors the discovery scan's read set);
       // non-integral keys admit no bounds ⇒ any winner add conflicts
@@ -1859,7 +1844,7 @@ object DeltaLog {
     // cdc actions in the same commit (exact row-level feed); on MAPPED
     // tables commitRewrite stages the cdc files under physical column
     // names like data files
-    val rtConf = tableConfiguration(spark, fs, tbl)
+    val rtConf = tableState(spark, fs, tbl).configuration
     val cdfEmit = confEnabled(rtConf, "delta.enableChangeDataFeed")
     // row tracking: surviving rows keep their ids via the materialized
     // columns (same mechanism as upsert)
@@ -1936,83 +1921,13 @@ object DeltaLog {
 
   private def requireNotAppendOnly(spark: SparkSession, fs: FileSystem,
       tbl: HPath, op: String): Unit =
-    if (confEnabled(tableConfiguration(spark, fs, tbl), "delta.appendOnly"))
+    if (confEnabled(tableState(spark, fs, tbl).configuration, "delta.appendOnly"))
       throw graft.GraftError.InvalidOperation(op,
         s"$tbl declares delta.appendOnly=true — row-removing mutations " +
           "are forbidden on append-only tables (append, merge and " +
           "optimize remain available)")
 
-  /** Memo for [[tableWriterProtocol]] keyed by [[logIdentity]] — the
-    * protocol action usually lives only in the version-0 commit, so an
-    * uncached lookup walks the log newest→oldest on every mutation.
-    */
-  private val writerProtoCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long, Long, Long), (Int, Seq[String])]()
-
-  /** Newest protocol action's writer half: (minWriterVersion,
-    * writerFeatures). Only POST-CHECKPOINT commits are walked (newest →
-    * oldest) — the checkpoint fold already carries the newest protocol
-    * from everything at-or-below it, so the walk is bounded by the
-    * checkpoint interval, never O(history) per mutation on a
-    * long-lived log. A log with no protocol action anywhere (not a
-    * delta table / legacy) reports the floor (1, Nil).
-    */
-  private def tableWriterProtocol(spark: SparkSession, fs: FileSystem,
-      tbl: HPath): (Int, Seq[String]) = {
-    val cacheKey = logIdentity(fs, tbl)
-    val hit = writerProtoCache.get(cacheKey)
-    if (hit != null) return hit
-    import com.fasterxml.jackson.databind.ObjectMapper
-    val mapper = new ObjectMapper()
-    def parse(p: com.fasterxml.jackson.databind.JsonNode): (Int, Seq[String]) = {
-      val v = Option(p.get("minWriterVersion")).map(_.asInt(1)).getOrElse(1)
-      val feats = scala.collection.mutable.ArrayBuffer.empty[String]
-      Option(p.get("writerFeatures")).filter(_.isArray)
-        .foreach(_.forEach(f => feats += f.asText))
-      (v, feats.toSeq)
-    }
-    val log = logDir(tbl)
-    val cpFloor = lastCheckpointVersion(fs, log)
-    val fromCommits = existingVersions(fs, log)
-      .filter(v => cpFloor.forall(v > _))
-      .reverse.iterator.flatMap { v =>
-      readString(fs, new HPath(log, commitName(v))).linesIterator.flatMap { line =>
-        val node = try mapper.readTree(line) catch { case _: Exception => null }
-        val p = if (node == null) null else node.get("protocol")
-        if (p != null && p.isObject) Some(parse(p)) else None
-      }.toSeq.lastOption
-    }.nextOption()
-    val result = fromCommits.orElse(lastCheckpointVersion(fs, log)
-        .flatMap(v => readCheckpoint(spark, fs, log, v)).flatMap { cp =>
-      if (!cp.columns.contains("protocol")) None
-      else cp.where(col("protocol").isNotNull)
-        .select(org.apache.spark.sql.functions.to_json(col("protocol")))
-        .collect().headOption.flatMap { r =>
-          val node = try mapper.readTree(r.getString(0)) catch { case _: Exception => null }
-          if (node != null && node.isObject) Some(parse(node)) else None
-        }
-    }).getOrElse((1, Nil))
-    if (writerProtoCache.size > 256) writerProtoCache.clear() // bound, not LRU
-    writerProtoCache.put(cacheKey, result)
-    result
-  }
-
   // ─────────────── protocol cover/union (overwrite upgrades) ───────────────
-
-  /** (minReader, minWriter, readerFeatures, writerFeatures) parsed from a
-    * `{"protocol":{...}}` action line. */
-  private def parseProtocolJson(json: String): (Int, Int, Seq[String], Seq[String]) = {
-    val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
-    val p = if (node.has("protocol")) node.get("protocol") else node
-    def feats(k: String): Seq[String] = {
-      val b = scala.collection.mutable.ArrayBuffer.empty[String]
-      Option(p.get(k)).filter(_.isArray).foreach(_.forEach(f => b += f.asText))
-      b.toSeq
-    }
-    (Option(p.get("minReaderVersion")).map(_.asInt(1)).getOrElse(1),
-      Option(p.get("minWriterVersion")).map(_.asInt(1)).getOrElse(1),
-      feats("readerFeatures"), feats("writerFeatures"))
-  }
 
   /** Writer features a LEGACY minWriterVersion implies (PROTOCOL.md's
     * version→feature table) — the translation an upgrade-to-v7 must list.
@@ -2036,7 +1951,10 @@ object DeltaLog {
   private def protocolUpgradeFor(current: (Int, Int, Seq[String], Seq[String]),
       requiredJson: String): Option[String] = {
     val (cr, cw, crf, cwf) = current
-    val (nr, nw, nrf, nwf) = parseProtocolJson(requiredJson)
+    val (nr, nw, nrf, nwf) = {
+      val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(requiredJson)
+      protocolOf(if (node.has("protocol")) node.get("protocol") else node)
+    }
     def wFeats(v: Int, f: Seq[String]): Set[String] =
       (if (v >= 7) f else impliedWriterFeatures(v)).toSet
     def rFeats(v: Int, f: Seq[String]): Set[String] =
@@ -2066,34 +1984,6 @@ object DeltaLog {
     Some(s"""{"protocol":{${fields.mkString(",")}}}""")
   }
 
-  /** Full newest protocol of an existing table — reader AND writer
-    * halves, same post-checkpoint walk as [[tableWriterProtocol]].
-    * Floor (1, 1, Nil, Nil) when no protocol action exists.
-    */
-  private def tableFullProtocol(spark: SparkSession, fs: FileSystem,
-      tbl: HPath): (Int, Int, Seq[String], Seq[String]) = {
-    import com.fasterxml.jackson.databind.ObjectMapper
-    val mapper = new ObjectMapper()
-    val log = logDir(tbl)
-    val cpFloor = lastCheckpointVersion(fs, log)
-    val fromCommits = existingVersions(fs, log)
-      .filter(v => cpFloor.forall(v > _))
-      .reverse.iterator.flatMap { v =>
-        readString(fs, new HPath(log, commitName(v))).linesIterator.flatMap { line =>
-          val node = try mapper.readTree(line) catch { case _: Exception => null }
-          if (node != null && node.has("protocol"))
-            Some(parseProtocolJson(line)) else None
-        }.toSeq.lastOption
-      }.nextOption()
-    fromCommits.orElse(cpFloor
-        .flatMap(v => readCheckpoint(spark, fs, log, v)).flatMap { cp =>
-      if (!cp.columns.contains("protocol")) None
-      else cp.where(col("protocol").isNotNull)
-        .select(org.apache.spark.sql.functions.to_json(col("protocol")))
-        .collect().headOption.map(r => parseProtocolJson(r.getString(0)))
-    }).getOrElse((1, 1, Nil, Nil))
-  }
-
   // ───────────────────────── row tracking ─────────────────────────
   //
   // Delta's rowTracking writer feature (PROTOCOL.md "Row Tracking"):
@@ -2115,48 +2005,6 @@ object DeltaLog {
   private def rowTrackingEnabled(conf: Map[String, String]): Boolean =
     confEnabled(conf, "delta.enableRowTracking")
 
-  /** Newest `rowIdHighWaterMark` from the delta.rowTracking
-    * domainMetadata — post-checkpoint commits newest→oldest, checkpoint
-    * fallback (the fold carries domainMetadata rows); -1 when the table
-    * has never assigned a row id.
-    */
-  private def rowIdHighWaterMark(spark: SparkSession, fs: FileSystem,
-      tbl: HPath): Long = {
-    import com.fasterxml.jackson.databind.ObjectMapper
-    val mapper = new ObjectMapper()
-    def hwmOf(json: String): Option[Long] = {
-      val node = try mapper.readTree(json) catch { case _: Exception => null }
-      if (node == null) return None
-      val dm = if (node.has("domainMetadata")) node.get("domainMetadata")
-        else node
-      if (dm == null || dm.get("domain") == null ||
-          dm.get("domain").asText != RowTrackingDomain ||
-          (dm.get("removed") != null && dm.get("removed").asBoolean(false)))
-        None
-      else Option(dm.get("configuration")).map(_.asText).flatMap { cs =>
-        val cn = try mapper.readTree(cs) catch { case _: Exception => null }
-        Option(cn).flatMap(c =>
-          Option(c.get("rowIdHighWaterMark")).map(_.asLong))
-      }
-    }
-    val log = logDir(tbl)
-    val cpFloor = lastCheckpointVersion(fs, log)
-    val fromCommits = existingVersions(fs, log)
-      .filter(v => cpFloor.forall(v > _))
-      .reverse.iterator.flatMap { v =>
-        readString(fs, new HPath(log, commitName(v))).linesIterator
-          .filter(_.contains("\"domainMetadata\""))
-          .flatMap(hwmOf).toSeq.lastOption
-      }.nextOption()
-    fromCommits.orElse(
-      cpFloor.flatMap(v => readCheckpoint(spark, fs, log, v)).flatMap { cp =>
-        if (!cp.columns.contains("domainMetadata")) None
-        else cp.where(col("domainMetadata").isNotNull)
-          .select(org.apache.spark.sql.functions.to_json(col("domainMetadata")))
-          .collect().toSeq.flatMap(r => hwmOf(r.getString(0))).maxOption
-      }).getOrElse(-1L)
-  }
-
   private def domainMetadataAction(hwm: Long): String =
     s"""{"domainMetadata":{"domain":"$RowTrackingDomain",""" +
       s""""configuration":"{\\"rowIdHighWaterMark\\":$hwm}",""" +
@@ -2172,52 +2020,12 @@ object DeltaLog {
     */
   private def clusteringColumns(spark: SparkSession, fs: FileSystem,
       tbl: HPath): Seq[String] = {
-    import com.fasterxml.jackson.databind.ObjectMapper
-    val mapper = new ObjectMapper()
-    def colsOf(json: String): Option[Seq[Seq[String]]] = {
-      val node = try mapper.readTree(json) catch { case _: Exception => null }
-      if (node == null) return None
-      val dm = if (node.has("domainMetadata")) node.get("domainMetadata")
-        else node
-      if (dm == null || dm.get("domain") == null ||
-          dm.get("domain").asText != "delta.clustering")
-        None
-      else if (dm.get("removed") != null && dm.get("removed").asBoolean(false))
-        Some(Nil) // removed domain: clustering explicitly dropped
-      else Option(dm.get("configuration")).map(_.asText).flatMap { cs =>
-        val cn = try mapper.readTree(cs) catch { case _: Exception => null }
-        Option(cn).flatMap(c => Option(c.get("clusteringColumns")))
-          .filter(_.isArray).map { arr =>
-            val out = scala.collection.mutable.ArrayBuffer.empty[Seq[String]]
-            arr.forEach { pathNode =>
-              val parts = scala.collection.mutable.ArrayBuffer.empty[String]
-              if (pathNode.isArray) pathNode.forEach(p => parts += p.asText)
-              else parts += pathNode.asText
-              out += parts.toSeq
-            }
-            out.toSeq
-          }
-      }
-    }
-    val log = logDir(tbl)
-    if (!fs.exists(log)) return Nil
-    val cpFloor = lastCheckpointVersion(fs, log)
-    val newest: Option[Seq[Seq[String]]] = existingVersions(fs, log)
-      .filter(v => cpFloor.forall(v > _))
-      .reverse.iterator.flatMap { v =>
-        readString(fs, new HPath(log, commitName(v))).linesIterator
-          .filter(_.contains("\"domainMetadata\""))
-          .flatMap(colsOf).toSeq.lastOption
-      }.nextOption()
-      .orElse(cpFloor.flatMap(v => readCheckpoint(spark, fs, log, v))
-        .flatMap { cp =>
-          if (!cp.columns.contains("domainMetadata")) None
-          else cp.where(col("domainMetadata").isNotNull)
-            .select(org.apache.spark.sql.functions.to_json(
-              col("domainMetadata")))
-            .collect().toSeq.flatMap(r => colsOf(r.getString(0))).headOption
-        })
-    val paths = newest.getOrElse(Nil)
+    import scala.jdk.CollectionConverters._
+    val paths = tableState(spark, fs, tbl).domainConfig("delta.clustering")
+      .flatMap(field(_, "clusteringColumns")).filter(_.isArray)
+      .fold(Seq.empty[Seq[String]])(_.elements.asScala.map(p =>
+        if (p.isArray) p.elements.asScala.map(_.asText).toSeq
+        else Seq(p.asText)).toSeq)
     if (paths.isEmpty || paths.exists(_.length != 1)) return Nil
     val names = paths.map(_.head)
     logicalSchemaIfMapped(spark, fs, tbl) match {
@@ -2292,7 +2100,7 @@ object DeltaLog {
   private def rowTrackingRewriteInfo(spark: SparkSession, fs: FileSystem,
       tbl: HPath, op: String)
       : (Boolean, Option[(String, String)], Seq[StructField]) = {
-    val conf = tableConfiguration(spark, fs, tbl)
+    val conf = tableState(spark, fs, tbl).configuration
     val rt = rowTrackingEnabled(conf)
     val mc = if (rt) Some(matColNames(conf, tbl, op)) else None
     (rt, mc, mc.toSeq.flatMap { case (i, v) => Seq(
@@ -2476,7 +2284,7 @@ object DeltaLog {
         s"$tbl requires an unsupported writer capability ($what); " +
           "mutating it without honoring that feature would corrupt the " +
           "table for its other readers and writers")
-    val (v, feats) = tableWriterProtocol(spark, fs, tbl)
+    val (_, v, _, feats) = tableState(spark, fs, tbl).protocol
     if (v > 7) refuse(s"protocol minWriterVersion $v")
     if (v == 7) {
       val conditional = Set("changeDataFeed", "generatedColumns",
@@ -2486,7 +2294,7 @@ object DeltaLog {
       if (unsupported.nonEmpty)
         refuse(s"writerFeatures ${unsupported.mkString("[", ", ", "]")}")
     }
-    val conf = tableConfiguration(spark, fs, tbl)
+    val conf = tableState(spark, fs, tbl).configuration
     // emitsCdc: the caller writes _change_data files + cdc actions for
     // this commit (deleteWhere/upsert on plain tables), so the CDF
     // contract is honored, not broken.
@@ -2993,13 +2801,7 @@ object DeltaLog {
           case Some(logical) => remapAddsToLogical(adds, logical)
           case None => adds
         }
-        val pcols0 = tablePartitionColumns(spark, fs, tbl).getOrElse(Nil)
-        val pcols = mapped match {
-          case Some(logical) =>
-            val m = physToLogMap(logical)
-            pcols0.map(c => m.getOrElse(c, c))
-          case None => pcols0
-        }
+        val pcols = logicalPartitionColumns(spark, fs, tbl, None)
         val keptRels = DeltaStats.prune(spark, predicate, schema, pcols,
           logicalAdds).map(_.rel).toSet
         adds.filter(a => keptRels(a.rel))
@@ -3076,7 +2878,7 @@ object DeltaLog {
     import com.fasterxml.jackson.databind.ObjectMapper
     val mapper = new ObjectMapper()
     val schemaOpt = parsedTableSchema(spark, fs, tbl)
-    val pcols = tablePartitionColumns(spark, fs, tbl).getOrElse(Nil)
+    val pcols = tableState(spark, fs, tbl).partitionColumns.getOrElse(Nil)
     val conj = readPredicate.flatMap(p =>
       schemaOpt.flatMap(_ => DeltaStats.parseConjuncts(spark, p)))
     readString(fs, new HPath(logDir(tbl), commitName(w)))
@@ -3132,7 +2934,7 @@ object DeltaLog {
     val version = nextVersion(fs, log).getOrElse(
       throw graft.GraftError.InvalidOperation(op.toLowerCase,
         s"$path is not a delta table (no _delta_log)"))
-    val partitionBy = latestPartitionColumns(fs, log).getOrElse(Nil)
+    val partitionBy = tableState(spark, fs, tbl).partitionColumns.getOrElse(Nil)
     // mapped tables: the rewrite stages under PHYSICAL column names (the
     // same logical->physical rename the append path applies) — and, for
     // id-mode tables, with parquet.field.id metadata so Spark's field-id
@@ -3146,6 +2948,7 @@ object DeltaLog {
     val mappedInfo: Option[(String, StructType)] =
       if (logicalFrame) logicalSchemaIfMapped(spark, fs, tbl) else None
     val idMapped = mappedInfo.exists(_._1 == "id")
+    requireFieldIdWrite(spark, idMapped, op.toLowerCase)
     val renamed = mappedInfo match {
       case Some((mode, logical)) =>
         if (mode == "id") requireIdWritable(logical, tbl, op.toLowerCase)
@@ -3190,11 +2993,9 @@ object DeltaLog {
     }
     val stage = new HPath(tbl, s".graft_stage_${java.util.UUID.randomUUID()}")
     val toWrite = numFiles.map(renamed.coalesce).getOrElse(renamed)
-    withFieldIdWriteIf(spark, idMapped) {
-      val w = toWrite.write.mode("overwrite")
-      (if (stagePartitionBy.nonEmpty) w.partitionBy(stagePartitionBy: _*)
-       else w).parquet(stage.toString)
-    }
+    val w = toWrite.write.mode("overwrite")
+    (if (stagePartitionBy.nonEmpty) w.partitionBy(stagePartitionBy: _*)
+     else w).parquet(stage.toString)
     val staged = dataFiles(fs, stage)
     staged.foreach { case (rel, _) =>
       val target = new HPath(tbl, rel)
@@ -3234,11 +3035,9 @@ object DeltaLog {
         case None => cdf0
       }
       val cdcStage = new HPath(tbl, s".graft_stage_cdc_${java.util.UUID.randomUUID()}")
-      withFieldIdWriteIf(spark, idMapped) {
-        val w = cdf.write.mode("overwrite")
-        (if (stagePartitionBy.nonEmpty) w.partitionBy(stagePartitionBy: _*)
-         else w).parquet(cdcStage.toString)
-      }
+      val w = cdf.write.mode("overwrite")
+      (if (stagePartitionBy.nonEmpty) w.partitionBy(stagePartitionBy: _*)
+       else w).parquet(cdcStage.toString)
       val parts = dataFiles(fs, cdcStage).toSeq.sortBy(_._1)
       val dir = new HPath(tbl, "_change_data")
       fs.mkdirs(dir)
@@ -3261,7 +3060,7 @@ object DeltaLog {
     def actionsFor(v: Long): String = {
       val actions = ListBuffer.empty[String]
       actions += commitInfoJson(op, txnId, fs, tbl,
-        tableConfiguration(spark, fs, tbl))
+        tableState(spark, fs, tbl).configuration)
       // metaData refresh riding a rewrite commit (identity high-water
       // mark bumps) — the caller supplies the full action
       extraMetaData.foreach(actions += _)
@@ -3292,10 +3091,10 @@ object DeltaLog {
       // Re-read per attempt: a rebase may follow a concurrent writer
       // who advanced the mark.
       val rowIdsByRel: Map[String, Long] =
-        if (!rowTrackingEnabled(tableConfiguration(spark, fs, tbl))) Map.empty
+        if (!rowTrackingEnabled(tableState(spark, fs, tbl).configuration)) Map.empty
         else {
           val (byRel, newHwm) = assignBaseRowIds(fs, tbl, stagedRels,
-            statsByRel, rowIdHighWaterMark(spark, fs, tbl))
+            statsByRel, tableState(spark, fs, tbl).rowIdHighWaterMark)
           actions += domainMetadataAction(newHwm)
           byRel
         }
@@ -3495,7 +3294,7 @@ object DeltaLog {
     // concurrent-reader / foreign-vacuum protection), and a shorter one
     // may trim them sooner
     val effectiveRetentionMs =
-      tableConfiguration(spark, fs, tbl)
+      tableState(spark, fs, tbl).configuration
         .get("delta.deletedFileRetentionDuration")
         .flatMap(parseDeltaInterval)
         .getOrElse(removeRetentionMs)
@@ -3522,7 +3321,7 @@ object DeltaLog {
     // sidecar parquets (written distributed, nParts ways) while a tiny
     // UUID-named manifest carries the non-file actions + sidecar refs.
     // Plain tables keep the classic single/multi-part layout.
-    val v2Table = tableWriterProtocol(spark, fs, tbl)._2
+    val v2Table = tableState(spark, fs, tbl).protocol._4
       .contains("v2Checkpoint")
     val nParts = math.max(1,
       math.ceil(activeCount.toDouble / math.max(1, rowsPerPart)).toInt)
@@ -3673,8 +3472,7 @@ object DeltaLog {
     * commit lines after it, replay in order ([[replayActions]]) under
     * the rules of [[distributedCheckpointFold]] — the newest add per live
     * path; the newest remove per dead path, kept inside the retention
-    * window; the newest metaData and protocol; the highest-version txn
-    * per appId; the newest domainMetadata per domain unless removed. The
+    * window; and the table-level actions by [[TableActions]]. The
     * action lines become a frame through a declared-schema JSON read of
     * local data, so no job runs before the checkpoint write; `n` parts
     * are `n` contiguous, non-empty slices of the lines (n ≤ adds).
@@ -3682,17 +3480,10 @@ object DeltaLog {
   private def driverCheckpointFold(spark: SparkSession, fs: FileSystem,
       log: HPath, path: String, prevCp: Option[Long], commits: Seq[Long],
       removeCutoff: Long): CheckpointFold = {
-    import com.fasterxml.jackson.databind.JsonNode
     import scala.collection.mutable.LinkedHashMap
     val adds = LinkedHashMap.empty[String, JsonNode]
     val removes = LinkedHashMap.empty[String, JsonNode]
-    val txns = LinkedHashMap.empty[Option[String], JsonNode]
-    val domains = LinkedHashMap.empty[Option[String], JsonNode]
-    var metaData, protocol = Option.empty[JsonNode]
-    def field(a: JsonNode, f: String): Option[JsonNode] =
-      Option(a.get(f)).filterNot(_.isNull)
-    def txnVersion(t: JsonNode): Long =
-      field(t, "version").fold(Long.MinValue)(_.asLong)
+    val table = new TableActions
     replayActions(spark, fs, log, path, prevCp, commits,
         CheckpointActionKinds, CheckpointActionKinds) {
       case ("add", a) => field(a, "path").foreach(p => adds(p.asText) = a)
@@ -3700,23 +3491,16 @@ object DeltaLog {
         adds -= p.asText
         removes(p.asText) = r
       }
-      case ("metaData", m) => metaData = Some(m)
-      case ("protocol", p) => protocol = Some(p)
-      case ("txn", t) =>
-        val app = field(t, "appId").map(_.asText)
-        if (txns.get(app).forall(o => txnVersion(t) >= txnVersion(o)))
-          txns(app) = t
-      case ("domainMetadata", d) => domains(field(d, "domain").map(_.asText)) = d
-      case _ =>
+      case (kind, a) => table.visit(kind, a)
     }
     val tombstones = removes.collect { case (p, r) if !adds.contains(p) &&
       field(r, "deletionTimestamp").forall(_.asLong >= removeCutoff) => r }
     def lines(kind: String, actions: Iterable[JsonNode]): Iterable[String] =
       actions.map(a => s"""{"$kind":$a}""")
     val all = (lines("add", adds.values) ++ lines("remove", tombstones) ++
-      lines("metaData", metaData) ++ lines("protocol", protocol) ++
-      lines("txn", txns.values) ++ lines("domainMetadata", domains.values
-        .filterNot(d => field(d, "removed").exists(_.asBoolean)))).toSeq
+      lines("metaData", table.metaData) ++ lines("protocol", table.protocol) ++
+      lines("txn", table.txns.values) ++
+      lines("domainMetadata", table.liveDomains)).toSeq
     val sess = spark
     import sess.implicits._
     def inParts(n: Int): DataFrame = spark.read.schema(CheckpointSchema)
@@ -3943,20 +3727,22 @@ object DeltaLog {
     * manifest actions (protocol/metaData/txn/checkpointMetadata)
     * unioned with the file actions of its sidecar parquets, so every
     * fold consumer sees one frame regardless of layout. None when the
-    * version has no checkpoint files.
+    * version has no checkpoint files. `fileActions = false` skips the
+    * sidecars, for a reader that wants only the manifest's actions.
     *
     * Parquet reads go through [[Loaders.readParquet]]: the schema Spark's
     * inference job would derive, from one footer read on the driver.
     */
   private def readCheckpoint(spark: SparkSession, fs: FileSystem,
-      log: HPath, v: Long): Option[DataFrame] = {
+      log: HPath, v: Long, fileActions: Boolean = true): Option[DataFrame] = {
     val paths = checkpointPaths(fs, log, v)
     if (paths.nonEmpty) return Some(Loaders.readParquet(spark, paths: _*))
     v2ManifestPath(fs, log, v).map { m =>
       val manifest =
         if (m.getName.endsWith(".json")) spark.read.json(m.toString)
         else Loaders.readParquet(spark, m.toString)
-      val sidecars = v2SidecarPaths(fs, log, manifest)
+      val sidecars =
+        if (fileActions) v2SidecarPaths(fs, log, manifest) else Nil
       if (sidecars.isEmpty) manifest
       else manifest.drop("sidecar").unionByName(
         Loaders.readParquet(spark, sidecars: _*), allowMissingColumns = true)
@@ -4123,8 +3909,8 @@ object DeltaLog {
     * commit files are tiny, and checkpoints bound how many replay).
     * `visit(kind, action)` sees each action of `checkpointKinds` in the
     * checkpoint, then each of `kinds` in the commits, oldest first — so
-    * a later visit is always the newer action. Unparseable lines are
-    * skipped.
+    * a later visit is always the newer action. Unparseable lines, and
+    * lines that name none of `kinds`, are skipped.
     */
   private def replayActions(spark: SparkSession, fs: FileSystem, log: HPath,
       path: String, cp: Option[Long], commits: Seq[Long], kinds: Seq[String],
@@ -4134,7 +3920,8 @@ object DeltaLog {
     def parse(json: String) =
       try Option(mapper.readTree(json)) catch { case _: Exception => None }
     cp.foreach { v =>
-      val df = readCheckpoint(spark, fs, log, v).getOrElse(
+      val df = readCheckpoint(spark, fs, log, v,
+          fileActions = checkpointKinds.exists(Set("add", "remove"))).getOrElse(
         throw graft.GraftError.InvalidOperation("load_delta",
           s"$path: _last_checkpoint names version $v but no checkpoint " +
             "parquet files exist"))
@@ -4150,15 +3937,16 @@ object DeltaLog {
             }
           }
     }
+    val keys = kinds.map(k => s""""$k"""")
     commits.foreach { v =>
-      readString(fs, new HPath(log, commitName(v))).linesIterator.foreach { line =>
-        parse(line).foreach { node =>
+      readString(fs, new HPath(log, commitName(v))).linesIterator
+        .filter(line => keys.exists(line.contains)).flatMap(parse)
+        .foreach { node =>
           kinds.foreach { k =>
             val a = node.get(k)
             if (a != null && !a.isNull) visit(k, a)
           }
         }
-      }
     }
   }
 
@@ -4334,12 +4122,9 @@ object DeltaLog {
         s"loadDelta: empty or missing _delta_log in $path"))
     val schemaOpt = parsedTableSchema(spark, fs, tbl, versionAsOf)
     val physToLog: Option[Map[String, String]] =
-      logicalSchemaIfMapped(spark, fs, tbl).map(m => physToLogMap(m._2))
-    val pcols0 = tablePartitionColumns(spark, fs, tbl).getOrElse(Nil)
-    val pcols = physToLog match {
-      case Some(m) => pcols0.map(c => m.getOrElse(c, c))
-      case None => pcols0
-    }
+      logicalSchemaIfMapped(spark, fs, tbl, versionAsOf)
+        .map(m => physToLogMap(m._2))
+    val pcols = logicalPartitionColumns(spark, fs, tbl, versionAsOf)
     val conjOpt = predicate.flatMap(p =>
       schemaOpt.flatMap(_ => DeltaStats.parseConjuncts(spark, p)))
     val sess = spark
@@ -4438,7 +4223,7 @@ object DeltaLog {
     */
   private def checkpointProtectionVersion(spark: SparkSession,
       fs: FileSystem, tbl: HPath): Long =
-    tableConfiguration(spark, fs, tbl)
+    tableState(spark, fs, tbl).configuration
       .get("delta.requireCheckpointProtectionBeforeVersion")
       .flatMap(s => scala.util.Try(s.trim.toLong).toOption)
       .getOrElse(0L)
@@ -4494,7 +4279,7 @@ object DeltaLog {
     */
   private def requireNoIcebergCompatDv(spark: SparkSession, fs: FileSystem,
       tbl: HPath, op: String): Unit = {
-    val conf = tableConfiguration(spark, fs, tbl)
+    val conf = tableState(spark, fs, tbl).configuration
     if (confEnabled(conf, "delta.enableIcebergCompatV1") ||
         confEnabled(conf, "delta.enableIcebergCompatV2"))
       throw graft.GraftError.InvalidOperation(op,
@@ -4502,13 +4287,9 @@ object DeltaLog {
           "use the copy-on-write delete instead")
   }
 
-  /** The table's `delta.columnMapping.mode` from the newest metaData —
-    * commits first, checkpoint fallback; "none" when unset.
-    */
   private def columnMappingMode(spark: SparkSession, fs: FileSystem,
       tbl: HPath, asOf: Option[Long] = None): String =
-    tableConfiguration(spark, fs, tbl, asOf)
-      .getOrElse("delta.columnMapping.mode", "none")
+    tableState(spark, fs, tbl, asOf).mappingMode
 
   /** Cache identity of a table's log: path + newest commit version +
     * that commit file's length and modification time + a CRC of its
@@ -4520,15 +4301,20 @@ object DeltaLog {
     * equal-length rebuild inside the filesystem's mtime granularity (1 s
     * on some object stores), so the content CRC closes that window; the
     * newest commit is a tiny file, one read per cache consultation vs
-    * the O(versions) walk the caches exist to avoid.
+    * the O(versions) walk the caches exist to avoid. A log cleaned down
+    * to its checkpoint has no commit left; its `_last_checkpoint` file
+    * stands in (version -1).
     */
   private def logIdentity(fs: FileSystem, tbl: HPath): (String, Long, Long, Long, Long) = {
     val log = logDir(tbl)
     val newest =
       if (!fs.exists(log)) None
-      else fs.listStatus(log).toSeq
-        .filter(_.getPath.getName.matches("\\d{20}\\.json"))
-        .sortBy(_.getPath.getName).lastOption
+      else {
+        val files = fs.listStatus(log).toSeq
+        files.filter(_.getPath.getName.matches("\\d{20}\\.json"))
+          .sortBy(_.getPath.getName).lastOption
+          .orElse(files.find(_.getPath.getName == "_last_checkpoint"))
+      }
     newest match {
       case Some(st) =>
         // CRC of the FIRST 64 KB only: combined with (version, len,
@@ -4551,89 +4337,11 @@ object DeltaLog {
           crc.update(buf, 0, off)
         } finally in.close()
         (tbl.toString,
-          st.getPath.getName.stripSuffix(".json").toLong, st.getLen,
+          st.getPath.getName.stripSuffix(".json").toLongOption.getOrElse(-1L),
+          st.getLen,
           st.getModificationTime, crc.getValue)
       case None => (tbl.toString, -1L, -1L, -1L, -1L)
     }
-  }
-
-  /** Memo for [[tableConfiguration]] keyed by [[logIdentity]]: a snapshot
-    * read consults the configuration 2-3 times (mapping-mode gate, read
-    * rename, write path) and each uncached call walks commits
-    * newest→oldest until it finds a metaData — typically all the way to
-    * version 0, so a long-history table paid O(versions) I/O per
-    * consultation. Any new or rewritten commit changes the key, so this
-    * is pure memoization (the function always resolves the NEWEST
-    * metaData).
-    */
-  private val confCache =
-    new java.util.concurrent.ConcurrentHashMap[((String, Long, Long, Long, Long), Long), Map[String, String]]()
-
-  /** Memo for [[tableSchemaJson]] under the same log identity (+ as-of
-    * version — older versions are immutable, so identity alone pins
-    * them): every declared-schema read consults the schema, and without
-    * the memo each consultation re-reads commit JSONs newest-first until
-    * a metaData line appears.
-    */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[((String, Long, Long, Long, Long), Long), Option[String]]()
-
-  /** Memo for [[tablePartitionColumns]] — same shape as [[schemaCache]]. */
-  private val partColsCache =
-    new java.util.concurrent.ConcurrentHashMap[((String, Long, Long, Long, Long), Long), Option[Seq[String]]]()
-
-  /** Table configuration map from the newest metaData (same visibility
-    * rule as [[tableSchemaJson]]; `asOf` bounds the search to commits ≤
-    * that version — configuration time-travels with the data).
-    */
-  private def tableConfiguration(spark: SparkSession, fs: FileSystem,
-      tbl: HPath, asOf: Option[Long] = None): Map[String, String] = {
-    val cacheKey = (logIdentity(fs, tbl), asOf.getOrElse(-1L))
-    val hit = confCache.get(cacheKey)
-    if (hit != null) return hit
-    import com.fasterxml.jackson.databind.ObjectMapper
-    val mapper = new ObjectMapper()
-    def parse(conf: com.fasterxml.jackson.databind.JsonNode): Map[String, String] = {
-      val b = Map.newBuilder[String, String]
-      conf.fields().forEachRemaining { e =>
-        b += e.getKey -> (if (e.getValue.isNull) null else e.getValue.asText)
-      }
-      b.result()
-    }
-    val log = logDir(tbl)
-    val fromCommits = existingVersions(fs, log)
-      .filter(v => asOf.forall(v <= _)).reverse.iterator.flatMap { v =>
-      readString(fs, new HPath(log, commitName(v))).linesIterator.flatMap { line =>
-        val node = try mapper.readTree(line) catch { case _: Exception => null }
-        val md = if (node == null) null else node.get("metaData")
-        val cf = if (md == null) null else md.get("configuration")
-        if (cf != null && cf.isObject) Some(parse(cf)) else None
-      }.toSeq.lastOption
-    }.nextOption()
-    val result = fromCommits.orElse(lastCheckpointVersion(fs, log)
-        .filter(v => asOf.forall(v <= _))
-        .flatMap(v => readCheckpoint(spark, fs, log, v)).flatMap { cp =>
-      val hasConf = cp.schema.fields.find(_.name == "metaData").exists(
-        _.dataType match {
-          case st: org.apache.spark.sql.types.StructType =>
-            st.fieldNames.contains("configuration")
-          case _ => false
-        })
-      if (hasConf) {
-        cp.where(col("metaData").isNotNull)
-          .select(org.apache.spark.sql.functions.to_json(col("metaData.configuration")))
-          .collect().headOption.flatMap { r =>
-            if (r.isNullAt(0)) None
-            else {
-              val node = try mapper.readTree(r.getString(0)) catch { case _: Exception => null }
-              if (node != null && node.isObject) Some(parse(node)) else None
-            }
-          }
-      } else None
-    }).getOrElse(Map.empty)
-    if (confCache.size > 256) confCache.clear() // bound, not LRU — refill is cheap
-    confCache.put(cacheKey, result)
-    result
   }
 
   /** Change feed between two versions — the incremental-consumption read
@@ -4976,7 +4684,7 @@ object DeltaLog {
       snapshotDriverMaxBytes: Long = SnapshotDriverMaxBytes): DataFrame = {
     val tbl = new HPath(path)
     val fs = tbl.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val conf = tableConfiguration(spark, fs, tbl)
+    val conf = tableState(spark, fs, tbl).configuration
     if (!rowTrackingEnabled(conf))
       throw graft.GraftError.InvalidOperation("load_delta",
         s"$path does not enable row tracking — _row_id has no meaning " +
@@ -5098,7 +4806,7 @@ object DeltaLog {
         // in directory names, not files, so they resolve by NAME against
         // the physical-named `col=val` segments — mapped back to logical
         // through the schema's physicalName annotations.
-        val pcols = tablePartitionColumns(spark, fs, tbl, versionAsOf)
+        val pcols = tableState(spark, fs, tbl, versionAsOf).partitionColumns
           .getOrElse(Nil)
         // metaData.partitionColumns may spell a partition column either
         // logically (delta-spark) or physically (other writers) — match
@@ -5522,7 +5230,7 @@ object DeltaLog {
     val fs = tbl.getFileSystem(spark.sparkContext.hadoopConfiguration)
     refuseOnCollatedColumns(spark, fs, tbl, "delete_delta_dv", predicate)
     requireNoIcebergCompatDv(spark, fs, tbl, "delete_delta_dv")
-    if (tableConfiguration(spark, fs, tbl)
+    if (tableState(spark, fs, tbl).configuration
         .getOrElse("delta.enableDeletionVectors", "false") != "true")
       throw graft.GraftError.InvalidOperation("delete_delta_dv",
         s"$path does not declare delta.enableDeletionVectors=true; DV " +
@@ -5657,7 +5365,7 @@ object DeltaLog {
     val now = System.currentTimeMillis()
     val actions = ListBuffer.empty[String]
     actions += commitInfoJson("DELETE", txnId, fs, tbl,
-      tableConfiguration(spark, fs, tbl))
+      tableState(spark, fs, tbl).configuration)
     mergedSets.foreach { case (add, _, _) =>
       val pvJson = add.partitionValues.map { case (k, v) =>
         s""""${esc(k)}":${if (v == null) "null" else "\"" + esc(v) + "\""}"""
@@ -5693,7 +5401,7 @@ object DeltaLog {
       // whose in-commit timestamp (ICT tables) this commit must exceed —
       // replaying the pre-built line would break ICT monotonicity
       actions(0) = commitInfoJson("DELETE", txnId, fs, tbl,
-        tableConfiguration(spark, fs, tbl))
+        tableState(spark, fs, tbl).configuration)
       if (acquireCommitSlot(fs, log, v, txnId,
           actions.mkString("\n") + "\n")) committed = true
       else {
@@ -5974,6 +5682,7 @@ object DeltaLog {
       partitionBy: Seq[String] = Nil): Unit = {
     import org.apache.spark.sql.types._
     val spark = df.sparkSession
+    requireFieldIdWrite(spark, idMapped = true, "write_id_mapped")
     val tbl = new HPath(path)
     val fs = tbl.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(tbl, true)
@@ -5998,13 +5707,11 @@ object DeltaLog {
             .putLong(ParquetFieldIdKey, lf.metadata.getLong(MappingIdKey))
             .build())
     }: _*)
-    withFieldIdWriteIf(spark, enable = true) {
-      val w = physDf.write.mode("overwrite")
-      // directories carry PHYSICAL names (the delta colmap layout)
-      (if (partitionBy.nonEmpty)
-         w.partitionBy(partitionBy.map(physByLogical): _*)
-       else w).parquet(path)
-    }
+    val w = physDf.write.mode("overwrite")
+    // directories carry PHYSICAL names (the delta colmap layout)
+    (if (partitionBy.nonEmpty)
+       w.partitionBy(partitionBy.map(physByLogical): _*)
+     else w).parquet(path)
     val rels = dataFiles(fs, tbl).keys.toSeq.sorted
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     def esc(x: String): String = {
@@ -6154,17 +5861,20 @@ object DeltaLog {
     check(logical, "")
   }
 
-  /** Run `body` with Spark's parquet field-id WRITE support forced on
-    * (when `enable`), restoring the session's prior setting — staged
-    * id-mode files must carry the ids their table resolves by. Unlike
-    * the read-side conf (left on by documented necessity, see
-    * [[readDataFiles]]), the write has no concurrent-plan race.
+  private val FieldIdWriteConf = "spark.sql.parquet.fieldId.write.enabled"
+
+  /** Refuse typed when an id-mapped write (`idMapped`) would stage files
+    * without the parquet field ids their table resolves by: Spark writes
+    * them only while [[FieldIdWriteConf]] is on, its default. The
+    * session's conf is left as the caller set it.
     */
-  private def withFieldIdWriteIf[T](spark: SparkSession, enable: Boolean)
-      (body: => T): T =
-    if (!enable) body
-    else Loaders.withConf(spark,
-      "spark.sql.parquet.fieldId.write.enabled" -> "true")(body)
+  private def requireFieldIdWrite(spark: SparkSession, idMapped: Boolean,
+      op: String): Unit =
+    if (idMapped && !spark.conf.get(FieldIdWriteConf, "true").trim
+        .equalsIgnoreCase("true"))
+      throw graft.GraftError.InvalidOperation(op,
+        s"id-mode column mapping writes parquet field ids, but the session " +
+          s"sets $FieldIdWriteConf=false; set it to true (Spark's default)")
 
   /** Logical-named read schema carrying parquet field ids: with
     * `spark.sql.parquet.fieldId.read.enabled` Spark resolves each column
@@ -6296,53 +6006,19 @@ object DeltaLog {
     // through the generation expression (implied conjuncts; sound for
     // deterministic expressions) — both the file-skipping kernel below
     // and the scan's own partition-dir pushdown see the augmented form
-    val predicate = augmentThroughGenerated(spark,
-      parsedTableSchema(spark, fs, tbl, versionAsOf),
-      tablePartitionColumns(spark, fs, tbl).getOrElse(Nil), predicate0)
-    // large log: snapshot fold AND stats pruning both run DISTRIBUTEDLY —
-    // DeltaStats.entryMayMatch is session-free, so the parsed conjuncts
-    // ship to executors and the driver sees only the SURVIVING file paths
-    // (plus their DV entries), never every add's stats JSON. On mapped
-    // tables the per-entry physical→logical stats-key remap ships too
-    // (remapAddToLogical is pure given the name map), so skipping keeps
-    // pruning there as well.
-    if (fs.exists(logDir(tbl)) &&
-        snapshotLogBytes(fs, logDir(tbl), versionAsOf) > snapshotDriverMaxBytes) {
-      val snap = activeAddsDfAsOf(spark, path, versionAsOf).getOrElse(
-        throw new IllegalArgumentException(
-          s"loadDelta: empty or missing _delta_log in $path"))
-      val schemaOpt = parsedTableSchema(spark, fs, tbl, versionAsOf)
-      val physToLog: Option[Map[String, String]] =
-        logicalSchemaIfMapped(spark, fs, tbl).map(m => physToLogMap(m._2))
-      val pcols0 = tablePartitionColumns(spark, fs, tbl).getOrElse(Nil)
-      val pcols = physToLog match {
-        case Some(m) => pcols0.map(c => m.getOrElse(c, c))
-        case None => pcols0
-      }
-      val conjOpt = schemaOpt.flatMap(_ =>
-        DeltaStats.parseConjuncts(spark, predicate))
+    val schemaOpt = parsedTableSchema(spark, fs, tbl, versionAsOf)
+    val predicate = augmentThroughGenerated(spark, schemaOpt,
+      tableState(spark, fs, tbl, versionAsOf).partitionColumns.getOrElse(Nil),
+      predicate0)
+    // large log: snapshot fold AND stats pruning both run DISTRIBUTEDLY
+    // ([[keptAddJsonsDf]]) — the driver sees only the SURVIVING file
+    // paths (plus their DV entries), never every add's stats JSON
+    val keptDs = keptAddJsonsDf(spark, path, Some(predicate), None,
+      versionAsOf, snapshotDriverMaxBytes)
+    if (keptDs.isDefined) {
       val sess = spark
       import sess.implicits._
-      val entries = snap.select("graft_add").as[String]
-      val keptEntries = (schemaOpt, conjOpt) match {
-        case (Some(schema), Some(conjuncts)) =>
-          entries.mapPartitions { it =>
-            val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-            it.filter { addJson =>
-              val node = try mapper.readTree(addJson) catch { case _: Exception => null }
-              // unparseable add ⇒ keep (conservative, like the driver path)
-              Option(node).flatMap(parseAddEntry).forall { e0 =>
-                val e = physToLog match {
-                  case Some(m) => remapAddToLogical(e0, m, mapper)
-                  case None => e0
-                }
-                DeltaStats.entryMayMatch(conjuncts, schema, pcols, e, mapper)
-              }
-            }
-          }
-        case _ => entries
-      }
-      val keptRows = keptEntries.localCheckpoint(true) // consumed twice
+      val keptRows = keptDs.get.localCheckpoint(true) // consumed twice
       val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
       val dvAdds = keptRows
         .filter(_.contains("\"deletionVector\"")).collect().toSeq
@@ -6378,26 +6054,16 @@ object DeltaLog {
     }
     val adds0 = activeAddsAsOf(spark, path, versionAsOf)
     require(adds0.nonEmpty, s"loadDelta: empty or missing _delta_log in $path")
-    val schemaOpt = parsedTableSchema(spark, fs, tbl, versionAsOf)
     // name-mode column mapping: add-action stats and partitionValues are
     // keyed by PHYSICAL names while the predicate (and table schema) use
     // logical ones — remap the metadata keys so skipping keeps working on
     // mapped tables instead of degrading to keep-everything
-    val nameMapped = logicalSchemaIfMapped(spark, fs, tbl).map(_._2)
+    val nameMapped = logicalSchemaIfMapped(spark, fs, tbl, versionAsOf).map(_._2)
     val adds = nameMapped match {
       case Some(logical) => remapAddsToLogical(adds0, logical)
       case None => adds0
     }
-    val pcols0 = tablePartitionColumns(spark, fs, tbl).getOrElse(Nil)
-    // metaData.partitionColumns carries physical names on mapped tables
-    val pcols = nameMapped match {
-      case Some(logical) =>
-        val physToLog = logical.fields.map(f =>
-          (if (f.metadata.contains(PhysicalNameKey))
-            f.metadata.getString(PhysicalNameKey) else f.name) -> f.name).toMap
-        pcols0.map(c => physToLog.getOrElse(c, c))
-      case None => pcols0
-    }
+    val pcols = logicalPartitionColumns(spark, fs, tbl, versionAsOf)
     val kept = schemaOpt match {
       case Some(schema) => DeltaStats.prune(spark, predicate, schema, pcols, adds)
       case None => adds
@@ -6435,6 +6101,17 @@ object DeltaLog {
     logical.fields.map(f =>
       (if (f.metadata.contains(PhysicalNameKey))
         f.metadata.getString(PhysicalNameKey) else f.name) -> f.name).toMap
+
+  /** The table's partition columns as of `asOf`, under their logical
+    * names: on a mapped table metaData.partitionColumns may spell them
+    * physically.
+    */
+  private def logicalPartitionColumns(spark: SparkSession, fs: FileSystem,
+      tbl: HPath, asOf: Option[Long]): Seq[String] = {
+    val pcols = tableState(spark, fs, tbl, asOf).partitionColumns.getOrElse(Nil)
+    logicalSchemaIfMapped(spark, fs, tbl, asOf).map(m => physToLogMap(m._2))
+      .fold(pcols)(m => pcols.map(c => m.getOrElse(c, c)))
+  }
 
   /** Single-entry kernel of [[remapAddsToLogical]]: pure given the
     * physical→logical name map, so the distributed prune can ship it to
@@ -6581,7 +6258,7 @@ object DeltaLog {
     val fs = tbl.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val predicate = augmentThroughGenerated(spark,
       parsedTableSchema(spark, fs, tbl),
-      tablePartitionColumns(spark, fs, tbl).getOrElse(Nil), predicate0)
+      tableState(spark, fs, tbl).partitionColumns.getOrElse(Nil), predicate0)
     // above the log-size threshold both counts come from distributed
     // aggregates — the driver holds two ints, never the add metadata
     keptAddJsonsDf(spark, path, Some(predicate), None, None,
@@ -6593,7 +6270,7 @@ object DeltaLog {
       case None =>
         val adds = activeAddsAsOf(spark, path, None)
         val schemaOpt = parsedTableSchema(spark, fs, tbl)
-        val pcols = tablePartitionColumns(spark, fs, tbl).getOrElse(Nil)
+        val pcols = tableState(spark, fs, tbl).partitionColumns.getOrElse(Nil)
         val kept = schemaOpt
           .map(s => DeltaStats.prune(spark, predicate, s, pcols, adds))
           .getOrElse(adds)
@@ -6926,7 +6603,7 @@ object DeltaLog {
     val txnId = java.util.UUID.randomUUID().toString
     val actions = ListBuffer.empty[String]
     actions += commitInfoJson("RESTORE", txnId, fs, tbl,
-      tableConfiguration(spark, fs, tbl))
+      tableState(spark, fs, tbl).configuration)
     val now = System.currentTimeMillis()
     removeEntries.foreach { a =>
       val removedDv = a.dv.map(d =>
@@ -6962,10 +6639,12 @@ object DeltaLog {
     * log-retention companion of [[vacuum]]: checkpoints bound REPLAY cost,
     * this bounds the `_delta_log` LISTING itself, which is what grows
     * unbounded on a high-frequency writer (a streaming sink committing
-    * every few seconds writes ~10⁶ commits/month). Readers are unaffected:
-    * snapshot replay, schema and partition-column resolution all fall back
-    * to the checkpoint; time travel to a cleaned version fails typed (its
-    * commit is gone — same visibility rule as real delta's log retention).
+    * every few seconds writes ~10⁶ commits/month). Readers and writers
+    * are unaffected: the snapshot replay and [[tableState]] (schema,
+    * partition columns, configuration, protocol, txn watermarks, domains)
+    * fold from the checkpoint plus the commits after it; time travel to a
+    * cleaned version fails typed (its commit is gone — same visibility
+    * rule as real delta's log retention).
     * Returns the deleted commit file names.
     */
   def cleanupLog(spark: SparkSession, path: String,

@@ -235,18 +235,15 @@ object Writers {
     * versions) over Spark-written parquet — see [[DeltaLog]] for the
     * protocol subset. Overwrite of an existing table is
     * VERSION-PRESERVING (delta-spark semantics): one remove-all+add
-    * commit, history/time-travel/CDF intact. `acceptCdfOverwrite` is a
-    * retired no-op compatibility alias from the log-restarting era.
+    * commit, history/time-travel/CDF intact.
     */
   def writeDeltaTable(df: DataFrame, mode: String, path: String,
       partitionBy: Seq[String] = Nil,
       txn: Option[(String, Long)] = None,
       tableProperties: Map[String, String] = Map.empty,
-      columnMapping: Option[String] = None,
-      acceptCdfOverwrite: Boolean = false): Unit =
+      columnMapping: Option[String] = None): Unit =
     DeltaLog.write(df, mode, path, partitionBy, txn = txn,
-      tableProperties = tableProperties, columnMapping = columnMapping,
-      acceptCdfOverwrite = acceptCdfOverwrite)
+      tableProperties = tableProperties, columnMapping = columnMapping)
 
   /** Copy-on-write MERGE/UPSERT into a delta table — see [[DeltaLog.upsert]]. */
   def upsertDeltaTable(updates: DataFrame, keys: Seq[String], path: String): Unit =

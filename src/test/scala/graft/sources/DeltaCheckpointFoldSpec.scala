@@ -439,10 +439,10 @@ class DeltaCheckpointFoldSpec extends SparkSpec {
     assert(tombstones > 0L)
     // txn watermarks: the highest version per appId survives the fold
     val txns = bothRoutes("txn")(p => Seq("app-x", "app-y").map(app =>
-      DeltaLog.latestTxnVersion(spark,
+      DeltaLog.tableState(spark,
         new org.apache.hadoop.fs.Path(p).getFileSystem(
           spark.sparkContext.hadoopConfiguration),
-        new org.apache.hadoop.fs.Path(p, "_delta_log"), app))) { (p, _) =>
+        new org.apache.hadoop.fs.Path(p)).txns.get(app))) { (p, _) =>
       DeltaLog.write(ids(1 to 2), "overwrite", p, txn = Some(("app-x", 1L)),
         checkpointInterval = 0)
       DeltaLog.write(ids(3 to 4), "append", p, txn = Some(("app-x", 2L)),
