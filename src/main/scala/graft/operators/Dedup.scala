@@ -1055,7 +1055,7 @@ object Dedup {
     val centroids = Similarity.seedAndRefine(c, nlist, refineIterations)
     // the assignment feeds BOTH sides of the within-cluster self-join —
     // eager localCheckpoint materializes the corpus scan once instead of
-    // per side (same policy as the Lloyd outputs)
+    // per side
     val asg = Similarity.assignToLists(c, centroids).localCheckpoint(true)
     val a = asg.select(col("list_id"), col("corpus_id").as("a_id"), col("cv").as("av"))
     val b = asg.select(col("list_id"), col("corpus_id").as("b_id"), col("cv").as("bv"))

@@ -1,10 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.types._
 import graft.functions.{VectorFunctions => V}
+import graft.plans.LloydExpressions
 import graft.sources.Loaders
 
 /** Approximate-nearest-neighbor similarity search over an embedding column
@@ -13,6 +15,18 @@ import graft.sources.Loaders
   * collected, only the query set is, and it's small by definition).
   * Scale path: sign-LSH bucketed search (probe only matching buckets) and
   * an IVF-style coarse quantizer (probe nearest centroids).
+  *
+  * DUPLICATE IDS ([[kmeansAssign]], [[clusterProfile]], [[ivfTopK]],
+  * [[ivfTopKIndexed]], [[hardNegatives]]): the id column is a key and
+  * should be unique. A frame that repeats an id is not rejected — the
+  * check would cost a job — and gets one rule per route:
+  *  - at nlist (or k) ≤ [[TwoLevelThreshold]] the nearest-centroid pick
+  *    is a projection, so every input row keeps its own row and its own
+  *    list: a repeated corpus id is two candidates, and the rows of a
+  *    repeated query id share one top-k (it is grouped by query id);
+  *  - above it the two-level route groups by id, so the rows of a
+  *    repeated id merge into one, carrying one of their vectors.
+  * `DuplicateIdSpec` pins what each entry point returns.
   */
 object Similarity {
 
@@ -142,7 +156,8 @@ object Similarity {
     * dependency), assign every corpus vector to its nearest centroid (one
     * broadcast pass), and at query time probe the nprobe nearest lists.
     * For the at-rest variant that probes with partition pruning, see
-    * [[buildIvfIndex]] / [[ivfTopKIndexed]].
+    * [[buildIvfIndex]] / [[ivfTopKIndexed]]. Duplicate ids: the rule in
+    * the [[Similarity]] header.
     */
   def ivfTopK(corpus: DataFrame, queries: DataFrame,
       vecCol: String, idCol: String, k: Int, nlist: Int = 16,
@@ -229,18 +244,24 @@ object Similarity {
         s"(cell/list ids ride bounded-heap aggregates as longs); got $idt")
     val m = math.max(metaProbes,
       math.ceil(math.sqrt(math.max(1L, nlistHint).toDouble)).toInt)
-    val metas = seedAndRefine(
+    val metaCents = seedAndRefine(
       centroids.select(col("cent_id").as("corpus_id"), col("centv").as("cv")),
       m, iterations = 1)
+    val metas = metaCents
       .select(col("cent_id").as("graft_meta"), col("centv").as("graft_metav"))
-    val cmap = centroids.join(broadcast(metas))
-      .withColumn("graft_md", V.l2Distance(col("centv"), col("graft_metav")))
-      .groupBy(col("cent_id"))
-      .agg(min(struct(col("graft_md"), col("graft_meta"))).as("graft_pick"),
-        min_by(col("centv"), col("graft_meta")).as("centv"))
-      .select(col("cent_id"), col("centv"),
-        col("graft_pick.graft_meta").cast("long").as("graft_cell"))
-      .localCheckpoint(true)
+    // each centroid's nearest meta: a projection over the driver-held
+    // metas (m ≤ TwoLevelThreshold), else the broadcast argmin
+    val cmap = (localPick(metaCents) match {
+      case Some(pick) => centroids.select(col("cent_id"), col("centv"),
+        pick(col("centv")).cast("long").as("graft_cell"))
+      case None => centroids.join(broadcast(metas))
+        .withColumn("graft_md", V.l2Distance(col("centv"), col("graft_metav")))
+        .groupBy(col("cent_id"))
+        .agg(min(struct(col("graft_md"), col("graft_meta"))).as("graft_pick"),
+          min_by(col("centv"), col("graft_meta")).as("centv"))
+        .select(col("cent_id"), col("centv"),
+          col("graft_pick.graft_meta").cast("long").as("graft_cell"))
+    }).localCheckpoint(true)
     // NOT pinned (tried r21: an eager checkpoint here ADDED jobs, 45 →
     // 47 on q_sim_ivf_twolevel — the two pm consumers already share the
     // tiny distinct+semi-join inside their own broadcast jobs)
@@ -310,7 +331,7 @@ object Similarity {
     val clash = q.columns.filter(reserved)
     require(clash.isEmpty, "probeLists: query frame carries internal " +
       s"column name(s) ${clash.mkString(", ")} — rename before probing")
-    val nlist = if (nlistHint >= 0L) nlistHint else centroids.count()
+    val nlist = if (nlistHint >= 0L) nlistHint else centroidCount(centroids)
     if (nlist > TwoLevelThreshold) {
       val picks = twoLevelNearestLists(
         q.select(col("query_id").as("graft_pid"), col("qv").as("graft_pv")),
@@ -348,71 +369,157 @@ object Similarity {
     * order, so the same corpus could yield different centroids run to
     * run (and break the replication oracle). Values are summed as
     * DECIMAL(38,18) — exact, order-independent — and the mean is
-    * double(sum)/count. Refinement balances the lists, which is what
+    * double(sum)/count ([[graft.plans.VecMeanAgg]], one map-side-combined
+    * aggregate per pass). Refinement balances the lists, which is what
     * bounds probe cost: with raw seeds a hot region funnels into one
     * list and that list's scan dominates; after a Lloyd step list sizes
     * concentrate toward corpus/nlist (measured in the spec).
+    *
+    * At nlist ≤ [[TwoLevelThreshold]] the centroids stay on the driver
+    * ([[lloydOnDriver]]) and come back as a local frame: every consumer
+    * reads them without re-running the Lloyd chain and without a
+    * checkpoint job. Above it the passes assign two-level and the
+    * result is pinned with an eager localCheckpoint — every caller
+    * consumes the centroids at least twice (assign + probe, or write +
+    * assign), and without the pin the whole refine re-executes once per
+    * consumer.
     */
   private[operators] def seedAndRefine(c0: DataFrame, nlist: Int,
-      iterations: Int): DataFrame = {
-    // pin the training vectors for the duration of the Lloyd passes —
-    // every iteration re-scans them, and without this each pass re-reads
-    // and re-projects the source (the standard cache-the-training-set
-    // pattern; spills to disk if the sample outgrows memory).
-    // Deliberately NOT fanned out (Par.fanOut): the Lloyd pass costs
-    // nlist distances per row and the measured bench A/B showed the
-    // extra exchange + 32-task stages LOSING on every Lloyd consumer
-    // (q_kmeans 1.42×, q_sim_ivf_twolevel 1.33×) — per-task overhead
-    // outweighs distance work at any under-parallel (i.e. small) scale.
-    val c = c0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Seed pick, threshold-gated like the assign/probe routing:
-    // below it, the first nlist vectors by id (a TakeOrdered — fine at
-    // small nlist, and the rule the graded replication oracles encode);
-    // above it, orderBy.limit would funnel nlist ∝ N rows of vectors
-    // through a single-partition global limit (≈15 GB at 10⁹ corpus) —
-    // instead a deterministic xxhash64 rate keeps ~nlist seeds fully
-    // distributed, no sort (seed count is binomial nlist ± √nlist; the
-    // list count is a sizing dial, not a contract, above this scale).
-    val seeds =
-      if (nlist <= TwoLevelThreshold)
-        c.orderBy(col("corpus_id")).limit(nlist)
-          .select(col("corpus_id").as("cent_id"), col("cv").as("centv"))
-      else {
-        val n = math.max(1L, c.count()) // persisted above; also warms it
-        val keep = math.min(1000000L,
-          math.ceil(nlist.toDouble / n * 1000000L).toLong)
-        c.where(pmod(xxhash64(lit(31L), col("corpus_id").cast("string")),
-            lit(1000000L)) < keep)
-          .select(col("corpus_id").as("cent_id"), col("cv").as("centv"))
-      }
-    val refined = (0 until iterations).foldLeft(seeds) { (cents, _) =>
-      // the hint doubles as the routing key: counting the un-checkpointed
-      // Lloyd intermediate would re-execute its whole lineage
-      assignToLists(c, cents, nlistHint = nlist)
-        .select(col("list_id"), posexplode(col("cv")).as(Seq("pos", "val")))
-        .groupBy(col("list_id"), col("pos"))
-        .agg((sum(col("val").cast(DecimalType(38, 18))).cast(DoubleType) /
-          count(lit(1))).as("m"))
-        .groupBy(col("list_id"))
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
-          x => x.getField("m")).as("centv"))
-        .select(col("list_id").as("cent_id"), col("centv"))
+      iterations: Int): DataFrame =
+    if (nlist <= TwoLevelThreshold)
+      lloydOnDriver(c0, nlist, iterations).toDF(c0.sparkSession)
+    else withPinned(c0) { c =>
+      // above the threshold orderBy.limit would funnel nlist ∝ N rows of
+      // vectors through a single-partition global limit (≈15 GB at 10⁹
+      // corpus) — instead a deterministic xxhash64 rate keeps ~nlist
+      // seeds fully distributed, no sort (seed count is binomial
+      // nlist ± √nlist; the list count is a sizing dial, not a contract,
+      // above this scale).
+      val n = math.max(1L, c.count()) // persisted; also warms it
+      val keep = math.min(1000000L,
+        math.ceil(nlist.toDouble / n * 1000000L).toLong)
+      val seeds = c.where(pmod(xxhash64(lit(31L), col("corpus_id").cast("string")),
+          lit(1000000L)) < keep)
+        .select(col("corpus_id").as("cent_id"), col("cv").as("centv"))
+      (0 until iterations).foldLeft(seeds) { (cents, _) =>
+        // the hint doubles as the routing key: counting the un-checkpointed
+        // Lloyd intermediate would re-execute its whole lineage
+        assignToLists(c, cents, nlistHint = nlist)
+          .groupBy(col("list_id"))
+          .agg(LloydExpressions.vecMean(col("cv")).as("centv"))
+          .where(col("centv").isNotNull)
+          .select(col("list_id").as("cent_id"), col("centv"))
+      }.localCheckpoint(true)
     }
-    // eager localCheckpoint: every caller consumes the centroids at least
-    // twice (assign + probe, or write + assign) and the Lloyd chain above
-    // is the expensive part of the whole index build — without this the
-    // full refine re-executes once per consumer. nlist rows: free to pin.
-    val out = refined.localCheckpoint(true)
-    c.unpersist()
-    out
+
+  /** Run `body` on `df` pinned (MEMORY_AND_DISK) and unpin it however
+    * `body` ends. Lloyd training re-scans its vectors once per pass;
+    * without the pin each pass re-reads and re-projects the source (the
+    * standard cache-the-training-set pattern; spills to disk if the
+    * sample outgrows memory). */
+  private def withPinned[T](df: DataFrame)(body: DataFrame => T): T = {
+    val pinned = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try body(pinned) finally pinned.unpersist()
   }
 
-  /** Nearest-centroid pick as min(struct(d, cent_id)) — the same argmin
-    * with the same cent_id tie-break a row_number window would compute,
-    * but as a map-side-combinable aggregation: the nlist candidate rows
-    * per vector collapse to one BEFORE the shuffle (nlist× less shuffle
-    * volume than a window, and no per-group sort). cv is join-duplicated
-    * so any group member carries it; min_by keeps the pick deterministic.
+  /** Lloyd centroids held on the driver: (cent_id, centv) rows, ids
+    * ascending in Spark's order. */
+  private[operators] final case class LocalCentroids(rows: Array[Row],
+      schema: StructType) {
+    def toDF(spark: SparkSession): DataFrame =
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+    /** the position (0-based, in id order) of `v`'s nearest centroid */
+    def nearestPos(v: Column): Column =
+      LloydExpressions.nearestCentroid(v, Array.tabulate(rows.length)(_.toLong),
+        vectors(rows))
+  }
+
+  /** The centv column of (cent_id, centv) rows as doubles. A null element
+    * reads 0.0, as the l2 kernel reads the null slot of an unsafe array. */
+  private def vectors(rows: Array[Row]): Array[Array[Double]] =
+    rows.map(r => if (r.isNullAt(1)) null else r.getSeq[Any](1).iterator.map {
+      case null => 0.0
+      case f: Float => f.toDouble
+      case d: Double => d
+    }.toArray)
+
+  /** [[seedAndRefine]] below the threshold, with the centroids held on
+    * the driver between passes. The seeds are the first nlist vectors by
+    * id (a TakeOrdered — the rule the graded replication oracles
+    * encode). Each pass is ONE aggregate whose nearest-centroid pick is a
+    * projection ([[graft.plans.NearestCentroid]] over the held matrix)
+    * and whose mean is [[graft.plans.VecMeanAgg]]: one exchange, no
+    * broadcast, and ≤ nlist rows collected. A list that lost every
+    * vector drops out, as before. Jobs: 1 for the seeds + 2 per pass.
+    *
+    * Deliberately NOT fanned out (Par.fanOut): the Lloyd pass costs
+    * nlist distances per row and the measured bench A/B showed the extra
+    * exchange + 32-task stages LOSING on every Lloyd consumer (q_kmeans
+    * 1.42×, q_sim_ivf_twolevel 1.33×) — per-task overhead outweighs
+    * distance work at any under-parallel (i.e. small) scale.
+    */
+  private def lloydOnDriver(c0: DataFrame, nlist: Int,
+      iterations: Int): LocalCentroids = withPinned(c0) { c =>
+    val seeds = c.orderBy(col("corpus_id")).limit(nlist)
+      .select(col("corpus_id").as("cent_id"), col("cv").as("centv"))
+    val refinedSchema = StructType(Seq(seeds.schema("cent_id"),
+      StructField("centv", ArrayType(DoubleType, containsNull = true))))
+    (0 until iterations).foldLeft(LocalCentroids(seeds.collect(), seeds.schema)) {
+      (cents, _) =>
+        if (cents.rows.isEmpty) cents
+        else {
+          val means = c.select(cents.nearestPos(col("cv")).as("graft_pos"), col("cv"))
+            .groupBy(col("graft_pos"))
+            .agg(LloydExpressions.vecMean(col("cv")).as("centv"))
+            .collect()
+          LocalCentroids(means.filter(!_.isNullAt(1)).sortBy(_.getLong(0))
+            .map(r => Row(cents.rows(r.getLong(0).toInt).get(0), r.get(1))),
+            refinedSchema)
+        }
+    }
+  }
+
+  private def isIntegral(t: DataType): Boolean =
+    Seq(ByteType, ShortType, IntegerType, LongType).contains(t)
+
+  private def isLocal(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
+
+  /** Rows of a centroid frame: read from the driver when it is local
+    * (no job), counted otherwise. */
+  private def centroidCount(centroids: DataFrame): Long =
+    if (isLocal(centroids)) centroids.collect().length.toLong else centroids.count()
+
+  /** The nearest-centroid pick as a projection, when `centroids` is a
+    * driver-local frame (what [[seedAndRefine]] returns at nlist ≤
+    * [[TwoLevelThreshold]]) with integral, non-null ids: reading it
+    * starts no job, and the pick replaces a broadcast join plus a
+    * grouping by point id. None otherwise (the caller's broadcast route).
+    * The pick yields the cent_id in its own type.
+    */
+  private def localPick(centroids: DataFrame): Option[Column => Column] = {
+    val idt = centroids.schema("cent_id").dataType
+    if (!isIntegral(idt) || !isLocal(centroids)) None
+    else {
+      val rows = centroids.select("cent_id", "centv").collect()
+      if (rows.isEmpty || rows.exists(_.isNullAt(0))) None
+      else {
+        val sorted = rows.sortBy(_.getAs[Number](0).longValue)
+        val ids = sorted.map(_.getAs[Number](0).longValue)
+        val mat = vectors(sorted)
+        Some(v => LloydExpressions.nearestCentroid(v, ids, mat).cast(idt))
+      }
+    }
+  }
+
+  /** Nearest centroid per row, with the cent_id tie-break a
+    * row_number window would compute. Flat route: over driver-local
+    * centroids a projection ([[localPick]]) — one output row per input
+    * row, no join, no exchange; over any other centroid frame
+    * min(struct(d, cent_id)) after a broadcast join, a
+    * map-side-combinable aggregation by corpus_id (cv is join-duplicated
+    * so any group member carries it; min_by keeps the pick
+    * deterministic). Above [[TwoLevelThreshold]] the two-level route.
     */
   private[operators] def assignToLists(c: DataFrame, centroids: DataFrame,
       nlistHint: Long = -1L,
@@ -422,7 +529,7 @@ object Similarity {
     // via min_by on the same cent_id order — one assignment kernel for
     // the plain and the carrier-augmented ([[hardNegatives]]) callers
     val carry = c.columns.filterNot(_ == "corpus_id")
-    val nlist = if (nlistHint >= 0L) nlistHint else centroids.count()
+    val nlist = if (nlistHint >= 0L) nlistHint else centroidCount(centroids)
     if (nlist > TwoLevelThreshold) {
       // two-level argmin (n = 1): the pick rides the same kernel as the
       // probe route
@@ -441,6 +548,12 @@ object Similarity {
       return c.join(picks.select(col("graft_pid").as("corpus_id"), col("list_id")),
           Seq("corpus_id"))
         .select(col("corpus_id") +: carry.map(col) :+ col("list_id"): _*)
+    }
+    localPick(centroids) match {
+      case Some(pick) =>
+        return c.select(col("corpus_id") +: carry.map(col) :+
+          pick(col("cv")).as("list_id"): _*)
+      case None =>
     }
     c.join(broadcast(centroids))
       .withColumn("d", V.l2Distance(col("cv"), col("centv")))
@@ -535,7 +648,7 @@ object Similarity {
       else c.where(pmod(xxhash64(lit(17L), col("corpus_id").cast("string")),
         lit(1000000L)) < (trainFraction * 1000000L).toLong)
     val centroids = seedAndRefine(cTrain, nlist, refineIterations)
-    require(centroids.count() > 0,
+    require(centroidCount(centroids) > 0,
       s"buildIvfIndex: the trainFraction=$trainFraction hash sample " +
         "selected no rows — raise trainFraction")
     centroids.write.mode("overwrite").parquet(s"${path}_centroids")
@@ -627,7 +740,9 @@ object Similarity {
     * filter that Catalyst turns into partition pruning; past
     * [[MaxProbedLiteral]] distinct lists → a shuffle join, see there),
     * exact cosine re-rank. Results are identical on both routes
-    * (spec-asserted) — the switch is purely a plan choice.
+    * (spec-asserted) — the switch is purely a plan choice. Duplicate ids:
+    * the rule in the [[Similarity]] header (the index keeps every row
+    * [[buildIvfIndex]] assigned).
     */
   def ivfTopKIndexed(indexPath: String, queries: DataFrame,
       vecCol: String, idCol: String, k: Int, nprobe: Int = 4,
@@ -692,9 +807,14 @@ object Similarity {
     *
     * Scale shape: Lloyd's full-width scans are the only corpus-wide
     * passes (gate them with `trainFraction` at 100 TB exactly like
-    * [[buildIvfPqIndex]]'s dial); assignment is one broadcast of k
-    * centroids + a map-side argmin, and the output is (id, cluster) —
-    * 12 B/row, never the vectors.
+    * [[buildIvfPqIndex]]'s dial); each is one aggregate whose exchange
+    * carries ≤ k mean buffers per mapper. At k ≤ 256 the k centroids
+    * stay on the driver and the assignment is a projection — a
+    * nearest-centroid pick per row, no join, no exchange — so a call is
+    * 1 seed job + 2 jobs per Lloyd pass + the consumer's own job. The
+    * output is (id, cluster) — 12 B/row, never the vectors. Duplicate
+    * ids (the rule in the [[Similarity]] header): one row per input row
+    * at k ≤ 256, each assigned by its own vector.
     */
   def kmeansAssign(corpus: DataFrame, vecCol: String, idCol: String,
       k: Int, refineIterations: Int = 1,
@@ -712,9 +832,10 @@ object Similarity {
     * an assignment describes that assignment's clustering. Labels are
     * re-indexed DENSE 0..k−1 (rank of the seed id), so cluster ids are
     * stable ints regardless of the corpus id range or the train sample.
-    * Fails fast (the centroid frame is k rows, already checkpointed —
-    * the count is free) when the trainFraction hash sample came up
-    * empty, instead of silently assigning zero rows.
+    * Fails fast when the trainFraction hash sample came up empty,
+    * instead of silently assigning zero rows. At k ≤ [[TwoLevelThreshold]]
+    * the re-index and the check run on the driver-held centroids and the
+    * result is a local frame, so [[assignToLists]] picks by projection.
     */
   private def kmeansCentroids(c: DataFrame, k: Int, refineIterations: Int,
       trainFraction: Double, op: String): DataFrame = {
@@ -725,14 +846,24 @@ object Similarity {
       if (trainFraction >= 1.0) c
       else c.where(pmod(xxhash64(lit(17L), col("corpus_id").cast("string")),
         lit(1000000L)) < (trainFraction * 1000000L).toLong)
-    val centroids = seedAndRefine(cTrain, k, refineIterations)
-    require(centroids.count() > 0,
-      s"$op: the trainFraction=$trainFraction hash sample selected no " +
-        "rows — raise trainFraction")
-    centroids
-      .withColumn("graft_dense", row_number().over(
-        Window.orderBy(col("cent_id"))) - 1)
-      .select(col("graft_dense").as("cent_id"), col("centv"))
+    val emptySample = s"$op: the trainFraction=$trainFraction hash sample " +
+      "selected no rows — raise trainFraction"
+    if (k <= TwoLevelThreshold) {
+      // the centroids are on the driver, ids ascending: the dense label is
+      // the row position — no count job, no global window
+      val cents = lloydOnDriver(cTrain, k, refineIterations)
+      require(cents.rows.nonEmpty, emptySample)
+      LocalCentroids(cents.rows.zipWithIndex.map { case (r, i) => Row(i, r.get(1)) },
+        StructType(Seq(StructField("cent_id", IntegerType, nullable = false),
+          cents.schema("centv")))).toDF(c.sparkSession)
+    } else {
+      val centroids = seedAndRefine(cTrain, k, refineIterations)
+      require(centroids.count() > 0, emptySample)
+      centroids
+        .withColumn("graft_dense", row_number().over(
+          Window.orderBy(col("cent_id"))) - 1)
+        .select(col("graft_dense").as("cent_id"), col("centv"))
+    }
   }
 
   /** Per-cluster quality card for a [[kmeansAssign]] clustering: size
@@ -744,7 +875,10 @@ object Similarity {
     * map-side cosine, one k-row rollup; the mean sums as
     * DECIMAL(38,18) like every graded mean (a plain double avg depends
     * on partial-aggregation order and would flake the hash gate at a
-    * rounding boundary).
+    * rounding boundary). Jobs: those of [[kmeansAssign]]'s training,
+    * the broadcast of the k centroids and the two of the k-row rollup.
+    * Duplicate ids (the rule in the [[Similarity]] header): `n_vecs`
+    * counts every input row at k ≤ 256.
     */
   def clusterProfile(corpus: DataFrame, vecCol: String, idCol: String,
       k: Int, refineIterations: Int = 1,
@@ -800,7 +934,8 @@ object Similarity {
     * anchor set is the corpus itself, but every anchor only meets its
     * nprobe lists' vectors (never all-pairs), labels ride the existing
     * assignment/probe rows (+4 B), and the top-k is the bounded-heap
-    * aggregate. No per-label reducer anywhere.
+    * aggregate. No per-label reducer anywhere. Duplicate ids: the rule
+    * in the [[Similarity]] header.
     */
   def hardNegatives(corpus: DataFrame, vecCol: String, idCol: String,
       labelCol: String, k: Int, nlist: Int = 16, nprobe: Int = 4,
@@ -988,8 +1123,7 @@ object Similarity {
     // pin the projected training sample across the Lloyd passes (same
     // policy as seedAndRefine — each pass would otherwise re-read and
     // re-slice the source)
-    val pieces = subvectors(trainSet, vecCol, idCol, m, dim)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    withPinned(subvectors(trainSet, vecCol, idCol, m, dim)) { pieces =>
     // seed selection: first ksub vectors by id via distributed top-k
     // (TakeOrderedAndProject) — a window partitioned only by subspace
     // would scan the whole corpus in one task per subspace. The window
@@ -1001,22 +1135,19 @@ object Similarity {
       .select(col("subspace"), (col("rn") - 1).cast("int").as("cent_id"),
         V.asDouble(col("sv")).as("centv"))
     val refined = (0 until refineIterations).foldLeft(seeds) { (cents, _) =>
+      // the same DECIMAL-exact mean as seedAndRefine, one aggregate per
+      // (subspace, cent_id): no dim-wide explode, one exchange for it
       assignPq(pieces, cents)
-        .select(col("subspace"), col("cent_id"),
-          posexplode(col("sv")).as(Seq("pos", "v")))
-        .groupBy(col("subspace"), col("cent_id"), col("pos"))
-        .agg((sum(col("v").cast(DecimalType(38, 18))).cast(DoubleType) /
-          count(lit(1))).as("mn"))
         .groupBy(col("subspace"), col("cent_id"))
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("mn")))),
-          x => x.getField("mn")).as("centv"))
+        .agg(LloydExpressions.vecMean(col("sv")).as("centv"))
+        .where(col("centv").isNotNull)
     }
-    // eager localCheckpoint (same policy as seedAndRefine): the codebook
-    // feeds pqEncode AND the per-query ADC LUT — m·ksub rows pinned once
-    // instead of re-running the subspace Lloyd chain per consumer
-    val out = refined.localCheckpoint(true)
-    pieces.unpersist()
-    out
+    // eager localCheckpoint (the policy of seedAndRefine's distributed
+    // route): the codebook feeds pqEncode AND the per-query ADC LUT —
+    // m·ksub rows pinned once instead of re-running the subspace Lloyd
+    // chain per consumer
+    refined.localCheckpoint(true)
+    }
   }
 
   /** Encode a corpus against trained codebooks: (corpus_id, codes) with

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.{ClassicConversions, ExpressionUtils}
+import org.apache.spark.sql.errors.QueryExecutionErrors
+import org.apache.spark.sql.types.Decimal
 
 /** Bridge into Spark 4's `private[sql]` Column↔Expression conversions.
   * Spark 4 moved the classic Column constructor behind
@@ -21,4 +23,13 @@ object GraftSqlShim {
   /** Parse-only check against the session's SQL parser. */
   def parses(spark: SparkSession, sql: String): Boolean =
     ClassicConversions.castToImpl(spark).sessionState.sqlParser.parsePlan(sql) != null
+
+  /** The error Spark's ANSI cast raises for a double outside
+    * DECIMAL(precision, scale). */
+  def castOverflow(x: Double, precision: Int, scale: Int): ArithmeticException =
+    QueryExecutionErrors.cannotChangeDecimalPrecisionError(Decimal(x), precision, scale, null)
+
+  /** The error Spark's ANSI `sum` raises when a decimal sum overflows. */
+  def sumOverflow(): ArithmeticException =
+    QueryExecutionErrors.overflowInSumOfDecimalError(null, "try_sum")
 }
