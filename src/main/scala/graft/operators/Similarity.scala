@@ -49,9 +49,8 @@ object Similarity {
     */
   private def topKPerQuery(df: DataFrame, scoreCol: String,
       scoreDesc: Boolean, k: Int, rankCol: String): DataFrame = {
-    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
     val idType = df.schema("corpus_id").dataType
-    require(Seq(ByteType, ShortType, IntegerType, LongType).contains(idType),
+    require(isIntegral(idType),
       "similarity top-k requires an integral id column (ids ride a " +
         s"bounded-heap aggregate as longs); got $idType — map string ids " +
         "to longs (dictionary or xxhash64) before searching")
@@ -153,8 +152,9 @@ object Similarity {
 
   /** IVF-style coarse index: pick nlist deterministic seed centroids (the
     * first nlist corpus vectors by id — deterministic without a kmeans
-    * dependency), assign every corpus vector to its nearest centroid (one
-    * broadcast pass), and at query time probe the nprobe nearest lists.
+    * dependency), assign every corpus vector to its nearest centroid (a
+    * projection over the driver-held centroids at nlist ≤ 256), and at
+    * query time probe the nprobe nearest lists.
     * For the at-rest variant that probes with partition pruning, see
     * [[buildIvfIndex]] / [[ivfTopKIndexed]]. Duplicate ids: the rule in
     * the [[Similarity]] header.
@@ -238,8 +238,7 @@ object Similarity {
   private[operators] def metaQuantizer(centroids: DataFrame,
       nlistHint: Long, metaProbes: Int): (DataFrame, DataFrame) = {
     val idt = centroids.schema("cent_id").dataType
-    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
-    require(Seq(ByteType, ShortType, IntegerType, LongType).contains(idt),
+    require(isIntegral(idt),
       "two-level centroid routing requires integral centroid ids " +
         s"(cell/list ids ride bounded-heap aggregates as longs); got $idt")
     val m = math.max(metaProbes,
@@ -1124,29 +1123,29 @@ object Similarity {
     // policy as seedAndRefine — each pass would otherwise re-read and
     // re-slice the source)
     withPinned(subvectors(trainSet, vecCol, idCol, m, dim)) { pieces =>
-    // seed selection: first ksub vectors by id via distributed top-k
-    // (TakeOrderedAndProject) — a window partitioned only by subspace
-    // would scan the whole corpus in one task per subspace. The window
-    // below runs over ksub×m rows only.
-    val seedVecs = trainSet.orderBy(col(idCol)).limit(ksub)
-    val seeds = subvectors(seedVecs, vecCol, idCol, m, dim)
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("subspace")).orderBy(col("corpus_id"))))
-      .select(col("subspace"), (col("rn") - 1).cast("int").as("cent_id"),
-        V.asDouble(col("sv")).as("centv"))
-    val refined = (0 until refineIterations).foldLeft(seeds) { (cents, _) =>
-      // the same DECIMAL-exact mean as seedAndRefine, one aggregate per
-      // (subspace, cent_id): no dim-wide explode, one exchange for it
-      assignPq(pieces, cents)
-        .groupBy(col("subspace"), col("cent_id"))
-        .agg(LloydExpressions.vecMean(col("sv")).as("centv"))
-        .where(col("centv").isNotNull)
-    }
-    // eager localCheckpoint (the policy of seedAndRefine's distributed
-    // route): the codebook feeds pqEncode AND the per-query ADC LUT —
-    // m·ksub rows pinned once instead of re-running the subspace Lloyd
-    // chain per consumer
-    refined.localCheckpoint(true)
+      // seed selection: first ksub vectors by id via distributed top-k
+      // (TakeOrderedAndProject) — a window partitioned only by subspace
+      // would scan the whole corpus in one task per subspace. The window
+      // below runs over ksub×m rows only.
+      val seedVecs = trainSet.orderBy(col(idCol)).limit(ksub)
+      val seeds = subvectors(seedVecs, vecCol, idCol, m, dim)
+        .withColumn("rn", row_number().over(
+          Window.partitionBy(col("subspace")).orderBy(col("corpus_id"))))
+        .select(col("subspace"), (col("rn") - 1).cast("int").as("cent_id"),
+          V.asDouble(col("sv")).as("centv"))
+      val refined = (0 until refineIterations).foldLeft(seeds) { (cents, _) =>
+        // the same DECIMAL-exact mean as seedAndRefine, one aggregate per
+        // (subspace, cent_id): no dim-wide explode, one exchange for it
+        assignPq(pieces, cents)
+          .groupBy(col("subspace"), col("cent_id"))
+          .agg(LloydExpressions.vecMean(col("sv")).as("centv"))
+          .where(col("centv").isNotNull)
+      }
+      // eager localCheckpoint (the policy of seedAndRefine's distributed
+      // route): the codebook feeds pqEncode AND the per-query ADC LUT —
+      // m·ksub rows pinned once instead of re-running the subspace Lloyd
+      // chain per consumer
+      refined.localCheckpoint(true)
     }
   }
 
